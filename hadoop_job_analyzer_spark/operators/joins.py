@@ -374,36 +374,6 @@ def join_star_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def join_star_multiway_two_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Legacy execution twin of join_star_multiway (registered through
-    r10): SMJ for orders⋈lineitem + a (orderkey, orderdate) grouped agg
-    that costs an extra full exchange of the joined rows. Kept
-    unregistered as the A/B baseline (9.19 s vs the registered 4.67 s
-    at x256, verification/r11_q3_ab.json); hash-equality pinned in
-    tests/test_wave19.py."""
-    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    l = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1996-01-01 00:00:00").cast("timestamp")
-    )
-    revenue = lsum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    agg = (
-        F.broadcast(c)
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(l, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(revenue.alias("revenue"))
-    )
-    w = Window.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-    return (
-        agg.orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-        .withColumn("rank_pos", F.row_number().over(w))
-    )
-
-
 @query(
     "join_skew_salted",
     oracle="""

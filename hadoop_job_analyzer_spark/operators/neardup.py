@@ -2203,7 +2203,6 @@ _KM_ROUNDS = 3  # fixed round count (deterministic; no convergence test)
 # where the oracle's SUM skips NULLs (ADVICE r16). Documented invariant,
 # not a runtime branch: enforcing it per-row would tax every vector for
 # a malformed-fixture case the loaders never produce.
-_KM_DIM = 64
 _KM_DIM = 64  # embedding dimensionality (pinned by catalog contract)
 
 

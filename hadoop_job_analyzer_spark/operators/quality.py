@@ -8,10 +8,6 @@ co-occurrence, session-length histogram, as-of attribution), seasonal
 structure (dow seasonal strength), embedding geometry (norm
 percentiles), and the two missing decon/funnel corpus stages.
 
-Registered LAST in ``registry._OP_MODULES`` so the driver's first-50
-correctness window (rotated in r4 onto the never-sampled surface, pinned
-by tests/test_registry.py) is untouched by this wave.
-
 Float policy (the ts_autocorr_lag discipline): any SUM whose operand
 order Spark and DuckDB could disagree on is accumulated in EXACT
 decimal (double terms cast to decimal first — double→decimal conversion

@@ -380,10 +380,10 @@ def win_sessionize_double_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation) that was the registered implementation through r9. All
     event rows pass through one exchange + sort + TWO Window operators
     before the aggregate — no partial aggregation is possible, so at
-    x256 it measured 2.87× DuckDB (scripts/sessionize_ab.py r10) while
+    x256 it measured 2.87× DuckDB (verification/r10_sessionize_ab.json) while
     the session_window formulation now registered measured 0.97×. Kept
-    unregistered as the A/B baseline and pinned hash-equal to the
-    registered key in tests/test_wave19.py.
+    unregistered as the reference that tests/test_wave19.py pins
+    hash-equal to the registered key.
     """
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -435,7 +435,7 @@ def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     event row, then run two full window passes; no partial agg is
     possible under a window). The only window pass left runs over
     per-session rows, orders of magnitude fewer. Measured same-scale
-    (scripts/sessionize_ab.py, symmetric protocol, x256 = 25.6 M
+    (verification/r10_sessionize_ab.json, symmetric protocol, x256 = 25.6 M
     events): 1.18 s vs DuckDB 1.217 s = **0.97×** (was 2.87×), and the
     ratio FALLS with scale (3.22× at x64, fixed-cost-dominated there).
     Skew: a hot user's reduce-side work is session-fragment-bounded
@@ -467,93 +467,6 @@ def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .drop("_win")
-    )
-    wu = Window.partitionBy("user_id").orderBy("session_start")
-    return sess.select(
-        "user_id",
-        F.row_number().over(wu).cast("bigint").alias("session_idx"),
-        "session_start",
-        "session_end",
-        "n_events",
-        "duration_sec",
-    )
-
-
-def win_sessionize_bucket_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate execution twin of win_sessionize (r11): BUCKET-CHAIN
-    sessionization — the agg_session_bounce_rate r11 insight applied to
-    the flagship key, and here no entry-pick packing is needed at all.
-
-    Fixed 1800 s buckets (width == gap) can never split internally under
-    the truncated-second > 1800 rule (in-bucket consecutive trunc diffs
-    are ≤ 1799), so:
-      1. HEAVY pass: one whole-stage-codegen HashAggregate per
-         (user_id, floor(trunc_sec/1800)) with ALL-PRIMITIVE buffers
-         (count + min/max of the long-backed µs timestamp) — no
-         MergingSessions pass, no map-side SortAggregate, no sort of
-         the event stream anywhere. Map-side combine ships
-         ~#nonempty-buckets rows; a hot user spreads across as many
-         hash cells as buckets (skew-proof without salt).
-      2. LIGHT pass: gaps-and-islands over bucket summaries per user —
-         a bucket chains iff trunc_sec(min_ts) − trunc_sec(prev_max_ts)
-         ≤ 1800, exactly the event-level rule (the boundary difference
-         IS the consecutive-event trunc gap; trunc of a min == min of
-         truncs). #buckets ≈ time-range/1800 rows per user, constant in
-         corpus size.
-      3. Session rows: sum/min/max per island + the same per-session
-         row_number the registered key uses for session_idx.
-
-    PROMOTION MEASURED AND REJECTED (r11,
-    verification/r11_sessionize_ab.json): x256 1.487 s vs the registered
-    session_window plan's 1.453 s — a tie, not the ≥ 20 % bar — and
-    SLOWER at x64 (1.34 vs 0.98 s; one extra stage of per-job fixed
-    cost). Why the bounce-rate win doesn't transfer: win_sessionize's
-    merge carries only primitive state (count/min/max over a narrow
-    (user_id, ts) projection), so session_window's map-side partial
-    merge is already sort-light and shuffle-optimal — the r11 bounce
-    rewrite won by deleting a NON-PRIMITIVE (struct) buffer that demoted
-    the whole aggregate to SortAggregate, a defect this key never had.
-    Kept unregistered as the measured dead-end; hash-equality vs the
-    registered key is pinned in tests/test_wave19.py."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.floor(F.col("ts").cast("long") / F.lit(1800)).alias("_bkt"),
-        "ts",
-    )
-    buckets = ev.groupBy("user_id", "_bkt").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.min("ts").alias("_min_ts"),
-        F.max("ts").alias("_max_ts"),
-    )
-    w = Window.partitionBy("user_id").orderBy("_bkt")
-    flagged = buckets.select(
-        "user_id",
-        "_bkt",
-        "_n",
-        "_min_ts",
-        "_max_ts",
-        F.when(
-            F.col("_min_ts").cast("long") - F.lag("_max_ts").over(w).cast("long")
-            <= 1800,
-            0,
-        ).otherwise(1).alias("_new"),  # NULL prev (first bucket) ⇒ new session
-    )
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sess = (
-        flagged.withColumn("_isl", F.sum("_new").over(w_run))
-        .groupBy("user_id", "_isl")
-        .agg(
-            F.min("_min_ts").alias("session_start"),
-            F.max("_max_ts").alias("session_end"),
-            F.sum("_n").alias("n_events"),
-            (
-                F.max("_max_ts").cast("long") - F.min("_min_ts").cast("long")
-            ).alias("duration_sec"),
-        )
     )
     wu = Window.partitionBy("user_id").orderBy("session_start")
     return sess.select(

@@ -42,8 +42,8 @@ def _default_parallelism() -> int:
 # load, BASELINE.md r9 state-store A/B); RocksDB holds the same state
 # off-heap in native files (93 MB JVM footprint at the same point) at
 # −12%-to-noise wall cost everywhere measured. A user should not need to
-# know this class string to make the production choice — hence the helper
-# + the HJA_STATE_STORE env hook in get_spark (default: rocksdb).
+# know this class string to make the production choice — hence the helper,
+# which get_spark always applies.
 ROCKSDB_STATE_STORE_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -196,9 +196,5 @@ def get_spark(app_name: str = "hja-spark", master: str | None = None) -> SparkSe
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Streaming state store: rocksdb by default (the production choice —
-    # see ROCKSDB_STATE_STORE_PROVIDER); HJA_STATE_STORE=hdfs opts back
-    # into the heap-map default for A/B work (scripts/state_store_ab.py).
-    if os.environ.get("HJA_STATE_STORE", "rocksdb").lower() != "hdfs":
-        enable_rocksdb_state_store(spark)
+    enable_rocksdb_state_store(spark)
     return apply_session_conf(spark)

@@ -97,6 +97,8 @@ def test_knn_kernel_stays_in_arrow(plan):
 
 
 def test_fingerprint_has_no_expand_and_parallel_map(plan):
+    from hadoop_job_analyzer_spark.operators.textops import _FP_INROW_MAX_CHARS
+
     # the registered key since r10: collapse identical texts first, so
     # gram explode + md5 run once per DISTINCT text (plan prints
     # root-first, so structural assertions use substring PRESENCE,
@@ -122,7 +124,7 @@ def test_fingerprint_has_no_expand_and_parallel_map(plan):
     # length(text) <= _FP_INROW_MAX_CHARS — the gate predicate must
     # reach BOTH branch scans (<= on the collapse input, > on the
     # exploded branch) and the two branches union.
-    assert p.count("65536") >= 2, p
+    assert p.count(str(_FP_INROW_MAX_CHARS)) >= 2, p
     assert "Union" in p
     # the collapse pair is the ONLY SortAggregate pair over corpus-sized
     # rows; the second pair (min/max strings) belongs to the beyond-gate

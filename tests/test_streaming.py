@@ -254,19 +254,6 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
     assert _rows(got_d) == _rows(queries()["stream_near_dedup_norm"](spark, sf_dir))
 
 
-def test_stream_stream_join_wm_twin_hash_equal(spark, sf_dir):
-    """stream_stream_join_wm at the registered key's 1-hour watermark
-    must reproduce the registered key row-for-row (execution-twin
-    discipline): the twin exists so scripts/wm_tradeoff.py can measure
-    the watermark-vs-state dial, and this pin guarantees the measured
-    object is semantically the registered join, not a drifted copy."""
-    from hadoop_job_analyzer_spark.streaming.streams import stream_stream_join_wm
-
-    got = stream_stream_join_wm(spark, sf_dir, "1 hour")
-    want = queries()["stream_stream_join"](spark, sf_dir)
-    assert _rows(got) == _rows(want)
-
-
 def test_state_operator_accounting(spark, sf_dir):
     """Pin the state-store accounting the scale harness reads (r9; the
     stateOperators[0] trap): lastProgress.stateOperators is a LIST with

@@ -245,48 +245,6 @@ def test_salted_sessionize_hash_equals_plain(spark, sf_dir):
     assert plain.count() == salted.count() > 0
 
 
-def test_join_star_legacy_two_key_agg_equals_registered(spark, sf_dir):
-    """join_star_multiway_two_key_agg (the SMJ + (orderkey, orderdate)
-    grouped plan, registered through r10) must reproduce the r11 SHJ +
-    single-key-agg formulation row-for-row — min(o_orderdate) attaches a
-    value constant within each order, and the long-path revenue sum is
-    order-independent integer arithmetic, so the reshape is execution
-    strategy only."""
-    from hadoop_job_analyzer_spark.operators.joins import (
-        join_star_multiway_two_key_agg,
-    )
-
-    plain = queries()["join_star_multiway"](spark, sf_dir)
-    legacy = join_star_multiway_two_key_agg(spark, sf_dir)
-    assert [(f.name, f.dataType) for f in plain.schema] == [
-        (f.name, f.dataType) for f in legacy.schema
-    ]
-    prow = [tuple(r) for r in plain.collect()]
-    lrow = [tuple(r) for r in legacy.collect()]
-    assert prow == lrow and len(prow) == 10
-
-
-def test_sessionize_bucket_chain_equals_registered(spark, sf_dir):
-    """win_sessionize_bucket_chain (r11 candidate: all-primitive
-    bucket-chain, no event-level sort) must reproduce the registered
-    session_window formulation row-for-row — same truncated-second
-    > 1800 rule (bucket width == gap means a bucket can never split
-    internally; cross-bucket chaining compares exactly the boundary
-    trunc gap), same session_idx numbering."""
-    from hadoop_job_analyzer_spark.operators.windows import (
-        win_sessionize_bucket_chain,
-    )
-
-    plain = queries()["win_sessionize"](spark, sf_dir)
-    cand = win_sessionize_bucket_chain(spark, sf_dir)
-    assert [(f.name, f.dataType) for f in plain.schema] == [
-        (f.name, f.dataType) for f in cand.schema
-    ]
-    assert cand.exceptAll(plain).count() == 0
-    assert plain.exceptAll(cand).count() == 0
-    assert plain.count() == cand.count() > 0
-
-
 def test_bounce_rate_lag_lead_equals_session_window_twin(spark, sf_dir):
     """The r11 lag/lead bounce plan must reproduce the r10
     session_window formulation row-for-row — entry/bounce flags are an
@@ -392,20 +350,6 @@ def test_salted_sessionize_boundary_cases(spark, tmp_path):
     prow = [tuple(r) for r in plain.collect()]
     srow = [tuple(r) for r in salted.collect()]
     assert prow == srow, f"plain != salted:\n{prow}\n{srow}"
-    # r11: the bucket-chain candidate must survive the same adversarial
-    # boundary set (exact-1800 chain — also a bucket-boundary chain —
-    # 1801 split, midnight crossings, duplicate timestamps)
-    from hadoop_job_analyzer_spark.operators.windows import (
-        win_sessionize_bucket_chain,
-    )
-
-    brow = [
-        tuple(r)
-        for r in win_sessionize_bucket_chain(spark, sf)
-        .orderBy("user_id", "session_idx")
-        .collect()
-    ]
-    assert prow == brow, f"plain != bucket_chain:\n{prow}\n{brow}"
     per_user = {}
     for r in plain.collect():
         per_user[r.user_id] = max(per_user.get(r.user_id, 0), r.session_idx)
@@ -496,7 +440,8 @@ def test_double_window_legacy_hash_equals_plain(spark, sf_dir):
     through r9) must reproduce the registered session_window formulation
     row-for-row: the r10 swap is an execution strategy, not a semantics
     change — same truncated-second > 1800 gap rule, same session_idx
-    numbering (scripts/sessionize_ab.py: 2.87× → 0.97× DuckDB at x256)."""
+    numbering (verification/r10_sessionize_ab.json: 2.87× → 0.97× DuckDB
+    at x256)."""
     from hadoop_job_analyzer_spark.operators.windows import (
         win_sessionize_double_window,
     )
