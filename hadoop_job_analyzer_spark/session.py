@@ -16,9 +16,16 @@ session we did not build.
 
 from __future__ import annotations
 
+import atexit
 import os
+import pathlib
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+from . import cds
 
 # Runtime-settable SQL confs applied to ANY session before our queries run.
 RUNTIME_CONF: dict[str, str] = {
@@ -67,6 +74,23 @@ def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:
 # the worker ModuleNotFoundError this mechanism exists to fix; appIds
 # embed the app start time and are fresh per context.
 _PKG_SHIPPED: set[str] = set()
+_PKG_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """Zip this package once per process into a temporary directory that
+    is removed at interpreter exit (again if a temp cleaner removed it)."""
+    global _PKG_ZIP
+    if _PKG_ZIP is None or not os.path.exists(_PKG_ZIP):
+        pkg_dir = pathlib.Path(__file__).resolve().parent
+        staging = tempfile.mkdtemp(prefix="hja_pyfiles_")
+        atexit.register(shutil.rmtree, staging, True)
+        zip_path = os.path.join(staging, "hadoop_job_analyzer_spark.zip")
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
+            for p in sorted(pkg_dir.rglob("*.py")):
+                z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
+        _PKG_ZIP = zip_path
+    return _PKG_ZIP
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -81,14 +105,11 @@ def _ship_package(spark: SparkSession) -> None:
     live in verification/README.md r7 notes). ``addPyFile`` is the
     cluster-correct mechanism: the zip is distributed to every executor
     and prepended to worker ``sys.path``, making the engine
-    self-contained regardless of deploy layout. Built once per driver
-    process (~100 .py files, metadata-sized); no-op on sessions without
-    a reachable SparkContext (e.g. Spark Connect).
+    self-contained regardless of deploy layout. The zip is built once per
+    driver process (~100 .py files, metadata-sized) and shipped once per
+    context; no-op on sessions without a reachable SparkContext (e.g.
+    Spark Connect).
     """
-    import pathlib
-    import tempfile
-    import zipfile
-
     try:
         sc = spark.sparkContext
         app_id = sc.applicationId
@@ -97,13 +118,7 @@ def _ship_package(spark: SparkSession) -> None:
     if app_id in _PKG_SHIPPED:
         return
     try:
-        pkg_dir = pathlib.Path(__file__).resolve().parent
-        staging = pathlib.Path(tempfile.mkdtemp(prefix="hja_pyfiles_"))
-        zip_path = staging / "hadoop_job_analyzer_spark.zip"
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
-        sc.addPyFile(str(zip_path))
+        sc.addPyFile(_package_zip())
         _PKG_SHIPPED.add(app_id)
     except Exception:
         # Shipping is a robustness layer, not a correctness dependency in
@@ -182,7 +197,18 @@ def release_transient_caches(blocking: bool = False) -> int:
 
 
 def get_spark(app_name: str = "hja-spark", master: str | None = None) -> SparkSession:
-    """Build the engine's own session (tests, bench, CLI use)."""
+    """Build the engine's own session (tests, bench, CLI use).
+
+    The driver JVM starts with a class-data sharing archive of Spark's
+    classes (see ``cds``), kept in ``$XDG_CACHE_HOME/hadoop_job_analyzer_spark``
+    (``~/.cache/...`` when that is unset). The first run on a machine
+    writes it at JVM exit (a slower run, and a dump of about 15 s at
+    exit); later runs check and use it, which roughly halves session
+    start. It is skipped, and the JVM starts as without it, when the
+    Spark conf directory holds real files, driver JVM options are already
+    set, or the cache directory cannot be written. Delete the directory
+    for a cold measurement.
+    """
     cpus = _default_parallelism()
     master = master or os.environ.get("HJA_MASTER", f"local[{cpus}]")
     b = (
@@ -194,7 +220,12 @@ def get_spark(app_name: str = "hja-spark", master: str | None = None) -> SparkSe
     )
     for k, v in RUNTIME_CONF.items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    launch = cds.driver_launch()
+    if launch is None:
+        spark = b.getOrCreate()
+    else:
+        with launch.environment():
+            spark = b.config("spark.driver.extraJavaOptions", launch.java_options).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     enable_rocksdb_state_store(spark)
     return apply_session_conf(spark)
