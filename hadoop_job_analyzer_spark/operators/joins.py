@@ -19,11 +19,14 @@ notes (the 100 TB story):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..sources.fixtures import _ARTIFACTS
 from ._common import dsum, lsum, o_dsum, tpersist
 
 _JOIN3_ORACLE = """
@@ -460,13 +463,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     presorted runs, cost O(n) merge-detection, and move no data; the
     eliminated TB-scale exchange is the point.
     """
-    import os as _os
-
-    art = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-        "_artifacts",
-    )
-    sf_tag = _os.path.basename(_os.path.normpath(sf_dir))
+    sf_tag = os.path.basename(os.path.normpath(sf_dir))
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     specs = {
         "lineitem": ("l_orderkey", ["l_orderkey", "l_quantity"]),
@@ -486,7 +483,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .repartition(n_buckets, F.col(key))
                 .write.format("parquet")
                 .mode("overwrite")
-                .option("path", _os.path.join(art, tbl))
+                .option("path", os.path.join(_ARTIFACTS, tbl))
                 .bucketBy(n_buckets, key)
                 .sortBy(key)
                 .saveAsTable(tbl)
@@ -563,7 +560,7 @@ GROUP BY e.event_type
 )
 def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning: the fact side is a parquet layout
-    PARTITIONED BY event_type (written once per sf under _artifacts);
+    PARTITIONED BY event_type (rewritten per call under _artifacts);
     joining it to a 2-row dimension makes Catalyst inject a runtime
     `dynamicpruning` subquery into the fact scan — only the 2 matching
     partitions (of 5) are read, decided at RUN time from the dim's
@@ -574,18 +571,14 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     The weighted sum follows the decimal policy (value × small exact
     weight per row, decimal-summed).
     """
-    import os as _os
-
-    art = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-        "_artifacts",
-    )
-    sf_tag = _os.path.basename(_os.path.normpath(sf_dir)).replace(".", "_")
-    path = _os.path.join(art, f"events_by_type_{sf_tag}")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
-            "event_type"
-        ).parquet(path)
+    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    path = os.path.join(_ARTIFACTS, f"events_by_type_{sf_tag}")
+    # Always rewrite (as scan_schema_evolution does): a layout kept on a
+    # _SUCCESS marker would outlive a regenerated events table at this
+    # sf path and serve its stale rows.
+    load_table(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
+        "event_type"
+    ).parquet(path)
     ev = spark.read.parquet(path)
     # the filter on the dim side is what convinces the DPP heuristic
     # (pruningHasBenefit) that a runtime subquery will actually skip

@@ -326,6 +326,13 @@ def _dot(a, b):
     )
 
 
+def _cos6(a, b):
+    """Cosine rounded to 6 places from three `_dot`s (a·b, a·a, b·b, in
+    that order) — the Spark twin of the oracles'
+    ROUND(list_cosine_similarity(a, b), 6)."""
+    return F.round(_dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 6)
+
+
 _O_COS = (
     "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
     " / SQRT(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[]))"
@@ -356,13 +363,10 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = _dot(F.col("embedding"), F.col("q_emb")) / F.sqrt(
-        _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("q_emb"), F.col("q_emb"))
-    )
     scored = (
         e.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(cos, 6).alias("cosine"))
+        .select("vec_id", _cos6(F.col("embedding"), F.col("q_emb")).alias("cosine"))
     )
     # limit-then-rank: TakeOrdered top-10 distributed, window only over
     # the survivors (same total order ⇒ identical rows + ranks)

@@ -15,13 +15,19 @@ list_cosine_similarity pipeline built from list_dot_product.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
 from ._common import spread, tpersist
-from .llm import MINHASH_PAIRS_FULL_ORACLE, MINHASH_PAIRS_ORACLE, _shingles, dedup_near_minhash
+from .llm import (
+    MINHASH_PAIRS_FULL_ORACLE,
+    MINHASH_PAIRS_ORACLE,
+    _cos6,
+    _shingles,
+    dedup_near_minhash,
+)
 
 _SIMHASH_BITS = 16
 _SIMHASH_BANDS = 2  # 2 bands x 8 bits
@@ -375,28 +381,23 @@ _IVF_ASSIGN_SQL = f"""cents AS (
 )"""
 
 
-def _ivf_assign(e: DataFrame, n_centroids: int = _IVF_N_CENTROIDS) -> DataFrame:
+def _ivf_assign(e: DataFrame) -> DataFrame:
     """(vec_id, cen_id): nearest-centroid assignment, Spark twin of
     _IVF_ASSIGN_SQL. Centroids are broadcast; the k-dots-per-vector
     map runs data-parallel (spread pre-satisfies the argmax window's
     vec_id clustering, so the window adds no extra shuffle).
 
-    ``n_centroids`` defaults to the oracle-pinned 16; scripts/
-    scale_stress.py passes k ≈ √n so the scale curves measure the
-    codebook growing with the corpus (per-bucket cost then stays
-    ~constant — the real 100 TB IVF discipline)."""
-    from .llm import _dot
-
-    cents = e.where(F.col("vec_id") < n_centroids).select(
+    The quantizer stays flat. A two-level √k×√k coarse quantizer was
+    measured against it (BASELINE.md, "Two-level √k×√k coarse
+    quantizer"): at the oracle-pinned k=16 it was slower (flat vs
+    two-level 1.39 vs 1.63 s on dedup_embedding_bucketed, 1.27 vs
+    1.98 s on sim_knn_join_bucketed, sf0.1) and buckets differently;
+    it only wins once the codebook grows to O(10²-10³) centroids.
+    """
+    cents = e.where(F.col("vec_id") < _IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
     )
-    cos_vc = F.round(
-        _dot(F.col("embedding"), F.col("c_emb"))
-        / F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("c_emb"), F.col("c_emb"))
-        ),
-        6,
-    )
+    cos_vc = _cos6(F.col("embedding"), F.col("c_emb"))
     w_assign = Window.partitionBy("vec_id").orderBy(F.col("cos_vc").desc(), F.col("cen_id").asc())
     return (
         spread(e, "vec_id")
@@ -404,140 +405,6 @@ def _ivf_assign(e: DataFrame, n_centroids: int = _IVF_N_CENTROIDS) -> DataFrame:
         .select("vec_id", "cen_id", cos_vc.alias("cos_vc"))
         .withColumn("rk", F.row_number().over(w_assign))
         .where(F.col("rk") == 1)
-        .select("vec_id", "cen_id")
-    )
-
-
-def _ivf_assign2(e: DataFrame, n_centroids: int) -> DataFrame:
-    """TWO-LEVEL IVF assignment (r5 verdict task #4): nearest of √k
-    coarse centroids first, then nearest fine centroid WITHIN that
-    coarse cell — n·2√k dot products instead of the flat quantizer's
-    n·k. This is the FAISS IMI / two-level coarse-quantizer discipline
-    that keeps assignment linear-ish as the codebook grows with the
-    corpus (k ∝ n ⇒ flat assignment is n²/400 — the measured 419.8 s
-    x64 pathology was the bucket-size analog of the same mistake).
-
-    Approximation note: a vector's globally-nearest fine centroid can
-    sit in a different coarse cell, so two-level assignment is a
-    different (still deterministic) bucketing — fine for the dedup/kNN
-    bucketing heuristic whose recall is measured, NOT hash-identical to
-    _ivf_assign. The registered keys therefore keep the flat assigner
-    (k=16 pinned by their oracles, where flat is also cheaper); this
-    path serves the scaled-codebook bench twins in scale_stress.py.
-
-    Promotion decision (r6 verdict task #8, measured 2026-08-14 at
-    sf0.1, k=16, warm): flat vs two-level = 1.39 vs 1.63 s
-    (dedup_embedding_bucketed) and 1.27 vs 1.98 s (sim_knn_join_bucketed)
-    — at the oracle-pinned codebook the extra coarse join + third argmax
-    window COSTS more than the n·(k−2√k) dot products it saves, and the
-    bucketing it produces differs (re-deriving the oracles would swap a
-    hash-exact flat-argmin spec for an equally arbitrary two-level spec
-    with zero accuracy gain). The crossover is codebook growth: at
-    k ≈ n/400 (x64 ⇒ k ≈ 5 k centroids) two-level wins 3.8×
-    (BASELINE.md: 9.8 vs 37.5 s). DECISION: registered keys stay flat;
-    ``two_level=True`` stays the documented scale path, exercised by the
-    curve program — promote only if the fixtures ever grow the pinned
-    codebook into the measured crossover region (O(10²-10³) centroids).
-
-    Plan: both codebooks broadcast; cent→coarse is a k×√k crossJoin
-    (metadata-sized); vectors take one √k-wide crossJoin argmax to pick
-    the coarse cell, then a broadcast equi-join on co_id fans each
-    vector to only its cell's ~√k fine centroids for the second argmax.
-    Both windows are vec_id-partitioned after spread — no extra
-    shuffles beyond the one spread.
-    """
-    import math
-
-    from .llm import _dot
-
-    n_coarse = max(2, math.isqrt(n_centroids))
-
-    def _cos(a: Column, b: Column) -> Column:
-        return F.round(_dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 6)
-
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
-    )
-    coarse = e.where(F.col("vec_id") < n_coarse).select(
-        F.col("vec_id").alias("co_id"), F.col("embedding").alias("co_emb")
-    )
-    w_c2 = Window.partitionBy("cen_id").orderBy(F.col("cos_cc").desc(), F.col("co_id").asc())
-    cent2co = (
-        cents.crossJoin(F.broadcast(coarse))
-        .select("cen_id", "c_emb", "co_id", _cos(F.col("c_emb"), F.col("co_emb")).alias("cos_cc"))
-        .withColumn("rk", F.row_number().over(w_c2))
-        .where(F.col("rk") == 1)
-        .select("cen_id", "c_emb", "co_id")
-    )
-    w_v2co = Window.partitionBy("vec_id").orderBy(F.col("cos_vc").desc(), F.col("co_id").asc())
-    v2co = (
-        spread(e, "vec_id")
-        .crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "embedding", "co_id", _cos(F.col("embedding"), F.col("co_emb")).alias("cos_vc")
-        )
-        .withColumn("rk", F.row_number().over(w_v2co))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "embedding", "co_id")
-    )
-    w_fine = Window.partitionBy("vec_id").orderBy(F.col("cos_vf").desc(), F.col("cen_id").asc())
-    return (
-        v2co.join(F.broadcast(cent2co), "co_id")
-        .select("vec_id", "cen_id", _cos(F.col("embedding"), F.col("c_emb")).alias("cos_vf"))
-        .withColumn("rk", F.row_number().over(w_fine))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cen_id")
-    )
-
-
-def _ivf_probe2(
-    probes: DataFrame, e: DataFrame, n_centroids: int, nprobe: int = _IVF_NPROBE
-) -> DataFrame:
-    """Two-level probe companion to _ivf_assign2: each probe vector picks
-    its nearest coarse cell (√k dots), then its ``nprobe`` best fine
-    centroids WITHIN that cell (~√k dots) — 2√k work per probe instead
-    of the flat k. Returns (vec_id, cen_id) with up to nprobe rows per
-    probe."""
-    import math
-
-    from .llm import _dot
-
-    n_coarse = max(2, math.isqrt(n_centroids))
-
-    def _cos(a: Column, b: Column) -> Column:
-        return F.round(_dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b)), 6)
-
-    cents = e.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
-    )
-    coarse = e.where(F.col("vec_id") < n_coarse).select(
-        F.col("vec_id").alias("co_id"), F.col("embedding").alias("co_emb")
-    )
-    w_c2 = Window.partitionBy("cen_id").orderBy(F.col("cos_cc").desc(), F.col("co_id").asc())
-    cent2co = (
-        cents.crossJoin(F.broadcast(coarse))
-        .select("cen_id", "c_emb", "co_id", _cos(F.col("c_emb"), F.col("co_emb")).alias("cos_cc"))
-        .withColumn("rk", F.row_number().over(w_c2))
-        .where(F.col("rk") == 1)
-        .select("cen_id", "c_emb", "co_id")
-    )
-    w_p2co = Window.partitionBy("vec_id").orderBy(F.col("cos_vc").desc(), F.col("co_id").asc())
-    p2co = (
-        spread(probes, "vec_id")
-        .crossJoin(F.broadcast(coarse))
-        .select(
-            "vec_id", "embedding", "co_id", _cos(F.col("embedding"), F.col("co_emb")).alias("cos_vc")
-        )
-        .withColumn("rk", F.row_number().over(w_p2co))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "embedding", "co_id")
-    )
-    w_fine = Window.partitionBy("vec_id").orderBy(F.col("cos_vf").desc(), F.col("cen_id").asc())
-    return (
-        p2co.join(F.broadcast(cent2co), "co_id")
-        .select("vec_id", "cen_id", _cos(F.col("embedding"), F.col("c_emb")).alias("cos_vf"))
-        .withColumn("rk", F.row_number().over(w_fine))
-        .where(F.col("rk") <= nprobe)
         .select("vec_id", "cen_id")
     )
 
@@ -574,26 +441,11 @@ def dedup_embedding_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The kernel accumulates dim-sequentially (float64) exactly like
     dedup_embedding, so shared pairs carry bit-identical cosines.
     """
-    return dedup_embedding_bucketed_at(spark, sf_dir)
-
-
-def dedup_embedding_bucketed_at(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = _IVF_N_CENTROIDS,
-    two_level: bool = False,
-) -> DataFrame:
-    """dedup_embedding_bucketed with a parameterized codebook size —
-    same plan, k centroids instead of the oracle-pinned 16. Used by
-    scripts/scale_stress.py with k ≈ √n to measure the scaled-codebook
-    curve (per-bucket pair work Σ|b|² ≈ n²/k stays ~n at k ≈ √n).
-    ``two_level=True`` swaps in the √k×√k coarse quantizer
-    (_ivf_assign2) so assignment cost is n·2√k instead of n·k."""
     import numpy as np
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings")
-    assign = _ivf_assign2(e, n_centroids) if two_level else _ivf_assign(e, n_centroids)
+    assign = _ivf_assign(e)
     bucketed = e.join(assign, "vec_id").select("cen_id", "vec_id", "embedding")
 
     def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -665,8 +517,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the write-path (stored as a partition column) and probing prunes
     partitions, which is exactly Spark partition pruning.
     """
-    from .llm import _dot
-
     e = load_table(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") < _IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
@@ -676,11 +526,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured 0.9 s -> 0.6 s at sf0.1.
     assign = _ivf_assign(e)
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos_qc = F.round(
-        _dot(F.col("q_emb"), F.col("c_emb"))
-        / F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")) * _dot(F.col("c_emb"), F.col("c_emb"))),
-        6,
-    )
+    cos_qc = _cos6(F.col("q_emb"), F.col("c_emb"))
     probe = (
         cents.crossJoin(F.broadcast(q))
         .select("cen_id", cos_qc.alias("cos_qc"))
@@ -693,13 +539,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(probe), "cen_id")
         .where(F.col("vec_id") != 0)
     )
-    cos_q = F.round(
-        _dot(F.col("embedding"), F.col("q_emb"))
-        / F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("q_emb"), F.col("q_emb"))
-        ),
-        6,
-    )
+    cos_q = _cos6(F.col("embedding"), F.col("q_emb"))
     # limit-then-rank (see sim_cosine_topk): top-10 distributed, then
     # row_number over the 10 survivors only
     w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
@@ -1608,18 +1448,15 @@ def emb_mrl_truncate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins two 10-row sets — all metadata-sized above the scans. Cosines
     round to 6 with vec_id tie-break so the cut is stable cross-engine.
     """
-    from .llm import _dot
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
 
     def top(d: int):
         a, b = F.slice(F.col("embedding"), 1, d), F.slice(F.col("q_emb"), 1, d)
-        cos = _dot(a, b) / F.sqrt(_dot(a, a) * _dot(b, b))
         return (
             e.where(F.col("vec_id") != 0)
             .crossJoin(F.broadcast(q))
-            .select("vec_id", F.round(cos, 6).alias("c"))
+            .select("vec_id", _cos6(a, b).alias("c"))
             .orderBy(F.col("c").desc(), F.col("vec_id").asc())
             .limit(10)
         )
@@ -2000,19 +1837,11 @@ def emb_ivf_build_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus scale. Mean cosine sums the 1e-6-snapped member
     cosines as exact decimals, divided once.
     """
-    from .llm import _dot
-
     e = load_table(spark, sf_dir, "embeddings")
     cents = e.where(F.col("vec_id") < _IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
     )
-    cos_vc = F.round(
-        _dot(F.col("embedding"), F.col("c_emb"))
-        / F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("c_emb"), F.col("c_emb"))
-        ),
-        6,
-    )
+    cos_vc = _cos6(F.col("embedding"), F.col("c_emb"))
     member_cos = (
         e.join(_ivf_assign(e), "vec_id")
         .join(F.broadcast(cents), "cen_id")
@@ -2076,55 +1905,25 @@ def sim_knn_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute key and the oracle on shared pairs; recall@3 vs brute force
     is pinned in tests.
     """
-    return sim_knn_join_bucketed_at(spark, sf_dir)
-
-
-def sim_knn_join_bucketed_at(
-    spark: SparkSession,
-    sf_dir: str,
-    n_centroids: int = _IVF_N_CENTROIDS,
-    two_level: bool = False,
-) -> DataFrame:
-    """sim_knn_join_bucketed with a parameterized codebook size (see
-    dedup_embedding_bucketed_at — same scaled-codebook rationale).
-    ``two_level=True``: assignment AND anchor probing go through the
-    √k×√k coarse quantizer — the probe picks the anchor's coarse cell
-    (√k dots) and then its nprobe best fine centroids within that cell
-    (~√k dots), so probing is also 2√k per anchor instead of k."""
     import numpy as np
     import pandas as pd
 
-    from .llm import _dot
-
     e = load_table(spark, sf_dir, "embeddings")
     anchors = e.where(F.col("label") == 0)
-    if two_level:
-        probe2 = _ivf_probe2(anchors, e, n_centroids)
-        assign = _ivf_assign2(e, n_centroids)
-    else:
-        cents = e.where(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
-        )
-        cos_vc = F.round(
-            _dot(F.col("embedding"), F.col("c_emb"))
-            / F.sqrt(
-                _dot(F.col("embedding"), F.col("embedding"))
-                * _dot(F.col("c_emb"), F.col("c_emb"))
-            ),
-            6,
-        )
-        w_probe = Window.partitionBy("vec_id").orderBy(
-            F.col("cos_vc").desc(), F.col("cen_id").asc()
-        )
-        probe2 = (
-            spread(anchors, "vec_id")
-            .crossJoin(F.broadcast(cents))
-            .select("vec_id", "cen_id", cos_vc.alias("cos_vc"))
-            .withColumn("rk", F.row_number().over(w_probe))
-            .where(F.col("rk") <= _IVF_NPROBE)
-            .select("vec_id", "cen_id")
-        )
-        assign = _ivf_assign(e, n_centroids)
+    cents = e.where(F.col("vec_id") < _IVF_N_CENTROIDS).select(
+        F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
+    )
+    cos_vc = _cos6(F.col("embedding"), F.col("c_emb"))
+    w_probe = Window.partitionBy("vec_id").orderBy(F.col("cos_vc").desc(), F.col("cen_id").asc())
+    probe2 = (
+        spread(anchors, "vec_id")
+        .crossJoin(F.broadcast(cents))
+        .select("vec_id", "cen_id", cos_vc.alias("cos_vc"))
+        .withColumn("rk", F.row_number().over(w_probe))
+        .where(F.col("rk") <= _IVF_NPROBE)
+        .select("vec_id", "cen_id")
+    )
+    assign = _ivf_assign(e)
     cand = e.join(assign, "vec_id").select(
         "cen_id", "vec_id", "embedding", F.lit(False).alias("is_anchor")
     )
@@ -2514,18 +2313,12 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     no top-k state at all, so the reduce side is empty (a pure filter
     is even cheaper than the rank merge).
     """
-    from .llm import _dot
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
     cents = e.where(F.col("vec_id") < _IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("cen_id"), F.col("embedding").alias("c_emb")
     )
-    cos_qc = F.round(
-        _dot(F.col("q_emb"), F.col("c_emb"))
-        / F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")) * _dot(F.col("c_emb"), F.col("c_emb"))),
-        6,
-    )
+    cos_qc = _cos6(F.col("q_emb"), F.col("c_emb"))
     probe = (
         cents.crossJoin(F.broadcast(q))
         .select("cen_id", cos_qc.alias("cos_qc"))
@@ -2533,13 +2326,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_IVF_NPROBE)
         .select("cen_id")
     )
-    cos_vq = F.round(
-        _dot(F.col("embedding"), F.col("q_emb"))
-        / F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("q_emb"), F.col("q_emb"))
-        ),
-        6,
-    )
+    cos_vq = _cos6(F.col("embedding"), F.col("q_emb"))
     return (
         e.join(_ivf_assign(e), "vec_id")
         .join(F.broadcast(probe), "cen_id")
@@ -2677,8 +2464,6 @@ def decon_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup keys document; multi-probe (sim_knn_join_bucketed's anchor
     replication) is the recall fix at real scale.
     """
-    from .llm import _dot
-
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
     docs = d.join(e, d.doc_id == e.vec_id).select("doc_id", "lang", "source", "embedding")
@@ -2698,11 +2483,7 @@ def decon_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = capped.where(F.col("source") == "src0").select(
         F.col("cen_id"), F.col("embedding").alias("b_emb")
     )
-    cos = F.round(
-        _dot(F.col("t_emb"), F.col("b_emb"))
-        / F.sqrt(_dot(F.col("t_emb"), F.col("t_emb")) * _dot(F.col("b_emb"), F.col("b_emb"))),
-        6,
-    )
+    cos = _cos6(F.col("t_emb"), F.col("b_emb"))
     hits = (
         train.join(bench, "cen_id")
         .where(cos >= _DECON_EMB_MIN_COS)
@@ -2850,8 +2631,6 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered, no global window over data-sized input (the final rank
     window sees ≤32 rows).
     """
-    from .llm import _dot
-
     half = _KM_DIM // 2
     e = load_table(spark, sf_dir, "embeddings")
 
@@ -2879,13 +2658,7 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_RERANK_SHORTLIST)
     )
     qv = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-    cos = F.round(
-        _dot(F.col("embedding"), F.col("q_emb"))
-        / F.sqrt(
-            _dot(F.col("embedding"), F.col("embedding")) * _dot(F.col("q_emb"), F.col("q_emb"))
-        ),
-        6,
-    )
+    cos = _cos6(F.col("embedding"), F.col("q_emb"))
     reranked = (
         shortlist.join(e, "vec_id")
         .crossJoin(F.broadcast(qv))

@@ -19,10 +19,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import COLUMNS, load_table
 from ..registry import query
-from ..sources.fixtures import ensure_csv_nation, ensure_jobs_jsonl
+from ..sources.fixtures import _ARTIFACTS, _FIXDIR, ensure_csv_nation, ensure_jobs_jsonl
 from ._common import dsum, o_dsum, tpersist
-
-_ARTIFACTS = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "_artifacts")
 
 
 @query("scan_parquet", oracle="SELECT * FROM lineitem")
@@ -51,11 +49,7 @@ def scan_column_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
 
 
-_NATION_CSV = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "nation.csv",
-)
+_NATION_CSV = os.path.join(_FIXDIR, "nation.csv")
 
 
 @query(
@@ -80,11 +74,7 @@ def scan_csv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JOBS_JSONL = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "jobs.jsonl",
-)
+_JOBS_JSONL = os.path.join(_FIXDIR, "jobs.jsonl")
 
 # DuckDB column spec mirroring the Spark DDL schema for the jobs JSONL
 # fixture (counters as a fixed STRUCT — the generator always emits the
@@ -334,11 +324,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JOBS_LOG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "jobs.log",
-)
+_JOBS_LOG = os.path.join(_FIXDIR, "jobs.log")
 
 
 @query(
@@ -581,10 +567,8 @@ def ops_job_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def job_summary_report_at(spark: SparkSession, path: str) -> DataFrame:
-    """ops_job_summary_report's plan over an arbitrary jobs-JSONL path —
-    shared with scripts/scale_stress.py, which stages inflated copies so
-    the report path gets a REAL scale curve (r5 verdict task #8) instead
-    of the fixture-sized flat line."""
+    """ops_job_summary_report's plan over an arbitrary jobs-JSONL path
+    (its r5 scale curve over inflated copies is recorded in BASELINE.md)."""
     schema = (
         "job_id STRING, user STRING, framework STRING, status STRING, "
         "submit_ts TIMESTAMP, duration_ms BIGINT, map_tasks INT, reduce_tasks INT, "
@@ -605,10 +589,7 @@ def job_summary_report_at(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-_DIRTY_CSV = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures", "nations_dirty.csv",
-)
+_DIRTY_CSV = os.path.join(_FIXDIR, "nations_dirty.csv")
 
 
 @query(
@@ -669,11 +650,7 @@ def scan_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ROWGROUPS_PARQUET = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "rowgroups.parquet",
-)
+_ROWGROUPS_PARQUET = os.path.join(_FIXDIR, "rowgroups.parquet")
 
 
 @query(

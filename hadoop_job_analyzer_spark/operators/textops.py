@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from ..sources.fixtures import ensure_zlib_ratio
+from ..sources.fixtures import _FIXDIR, ensure_zlib_ratio
 from ._common import distributed_rank, spread, tpersist
 
 # Marker-word profiles (space-padded, counted in ' '||text||' ').
@@ -238,9 +238,9 @@ def text_fingerprint_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded row stream is codegen'd.
 
     Kept unregistered as the dup-agnostic baseline (its md5 mass is
-    #grams regardless of corpus shape) and the A/B baseline in
-    scripts/fingerprint_ab.py; pinned hash-equal to the registered key
-    in tests/test_llm_ext.py.
+    #grams regardless of corpus shape; the r10 A/B baseline recorded in
+    verification/r10_fingerprint_ab.json); pinned hash-equal to the
+    registered key in tests/test_llm_ext.py.
     """
     d = spread(
         load_table(spark, sf_dir, "documents").where(F.length("text") >= 8), "doc_id"
@@ -303,10 +303,11 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     one declarative plan.
 
     Regime honesty: on a dup-HEAVY corpus the md5 mass divides by the
-    duplication factor — measured same-scale (scripts/fingerprint_ab.py,
-    x64 = 320 k docs): 15.7 s → **1.70 s** = 0.16× DuckDB's 10.3 s
-    (the r9 per-doc plan sat at 1.53× and RISING with scale; this was
-    the one wrong-direction data-path trend). On a dup-FREE corpus the
+    duplication factor — measured same-scale
+    (verification/r10_fingerprint_ab.json, x64 = 320 k docs): 15.7 s →
+    **1.70 s** = 0.16× DuckDB's 10.3 s (the r9 per-doc plan sat at
+    1.53× and RISING with scale; this was the one wrong-direction
+    data-path trend). On a dup-FREE corpus the
     collapse is a no-op and the added cost is one text-keyed shuffle of
     the corpus (AQE falls back from broadcast to a shuffle join) on top
     of the per-doc twin's mass — degradation, not failure; use
@@ -608,11 +609,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZLIB_FIXTURE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    "fixtures",
-    "zlib_ratio.parquet",
-)
+_ZLIB_FIXTURE = os.path.join(_FIXDIR, "zlib_ratio.parquet")
 
 
 @query(

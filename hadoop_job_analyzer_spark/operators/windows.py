@@ -534,8 +534,8 @@ def win_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the twins are oracle-ready and hash-equal to the plain keys at two
     SFs — tests/test_wave19.py — so registering them puts the skew-safe
     paths under the external hash gate). Oracle is the plain key's:
-    identical result is the whole point. Also exercised by the skew
-    curve program (scripts/scale_stress.py, 1.9-2.5x at skew_x256).
+    identical result is the whole point. Its skew win is recorded in
+    BASELINE.md ("salted twins at skew_x256": 1.9-2.5x).
 
     Two-level plan, the hierarchical gaps-and-islands repair:
       1. HEAVY pass, salted: sessionize per (user_id, calendar day) —

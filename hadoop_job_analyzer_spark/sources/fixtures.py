@@ -9,6 +9,12 @@ The ``jobs`` JSONL fixture is the reference-domain record shape
 (FIXTURES.md table 11): one Hadoop-job-like record per line with conf
 counters as a nested map — the closest stand-in for the reference's
 JobTracker harvest [R-M] that exists in this environment.
+
+Every writer goes through ``_write_once``: the file is filled under a
+temporary name in ``_FIXDIR`` and renamed into place, so a run killed
+mid-write never leaves a truncated fixture that later runs would accept.
+``_ARTIFACTS`` is the repo-local scratch root of the writer keys (sinks,
+staged stream sources, layouts).
 """
 
 from __future__ import annotations
@@ -16,12 +22,13 @@ from __future__ import annotations
 import json
 import os
 import random
+from collections.abc import Callable
 
 import pyarrow.parquet as pq
 
-_FIXDIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "fixtures"
-)
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_FIXDIR = os.path.join(_ROOT, "fixtures")
+_ARTIFACTS = os.path.join(_ROOT, "_artifacts")
 
 FRAMEWORKS = ["hive", "pig", "cascading", "streaming", "native"]
 STATUSES = ["SUCCEEDED", "FAILED", "KILLED"]
@@ -31,18 +38,35 @@ COUNTER_KEYS = ["hdfs_bytes_read", "hdfs_bytes_written", "map_input_records", "s
 N_JOBS = 240
 
 
+def _write_once(name: str, write: Callable[[str], None]) -> str:
+    """Path of fixture ``name`` in _FIXDIR, created on first use by
+    ``write(tmp)`` into a temporary file in the same directory that then
+    replaces the final path atomically (a failed write removes it)."""
+    path = os.path.join(_FIXDIR, name)
+    if not os.path.exists(path):
+        os.makedirs(_FIXDIR, exist_ok=True)
+        tmp = f"{path}.{os.getpid()}.tmp"
+        try:
+            write(tmp)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+    return path
+
+
 def ensure_csv_nation(spark, sf_dir: str) -> str:
     """nation.parquet → nation.csv (25 rows, same at every sf)."""
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "nation.csv")
-    if not os.path.exists(path):
+
+    def write(tmp: str) -> None:
         tbl = pq.read_table(f"{sf_dir.rstrip('/')}/nation.parquet")
         rows = sorted(zip(*[tbl.column(c).to_pylist() for c in ["n_nationkey", "n_name", "n_regionkey"]]))
-        with open(path, "w") as f:
+        with open(tmp, "w") as f:
             f.write("n_nationkey,n_name,n_regionkey\n")
             for k, name, rk in rows:
                 f.write(f"{k},{name},{rk}\n")
-    return path
+
+    return _write_once("nation.csv", write)
 
 
 def jobs_records() -> list[dict]:
@@ -68,23 +92,21 @@ def jobs_records() -> list[dict]:
 
 
 def ensure_jobs_jsonl() -> str:
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "jobs.jsonl")
-    if not os.path.exists(path):
-        with open(path, "w") as f:
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
             for r in jobs_records():
                 f.write(json.dumps(r, sort_keys=True) + "\n")
-    return path
+
+    return _write_once("jobs.jsonl", write)
 
 
 def ensure_jobs_log() -> str:
     """jobs records as RAW LOG LINES (the reference's native input shape):
     one JobComplete line per record plus a deterministic WARN noise line
     every 10th record — so the parse key has to FILTER as well as extract."""
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "jobs.log")
-    if not os.path.exists(path):
-        with open(path, "w") as f:
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
             for i, r in enumerate(jobs_records()):
                 f.write(
                     f"{r['submit_ts']} INFO JobComplete job={r['job_id']} "
@@ -94,7 +116,8 @@ def ensure_jobs_log() -> str:
                 )
                 if i % 10 == 0:
                     f.write(f"{r['submit_ts']} WARN SlowHeartbeat node=node{i % 40}\n")
-    return path
+
+    return _write_once("jobs.log", write)
 
 
 def ensure_zlib_ratio() -> str:
@@ -111,9 +134,7 @@ def ensure_zlib_ratio() -> str:
     import hashlib
     import zlib
 
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "zlib_ratio.parquet")
-    if not os.path.exists(path):
+    def write(tmp: str) -> None:
         import pyarrow as pa
 
         seen: dict[str, float] = {}
@@ -134,9 +155,10 @@ def ensure_zlib_ratio() -> str:
                     "compression_ratio": pa.array([seen[k] for k in keys], pa.float64()),
                 }
             ),
-            path,
+            tmp,
         )
-    return path
+
+    return _write_once("zlib_ratio.parquet", write)
 
 
 def ensure_malformed_csv() -> str:
@@ -145,16 +167,16 @@ def ensure_malformed_csv() -> str:
     for scan_csv_malformed_permissive. Both engines must classify the
     same lines as bad: the corruption is unambiguous (type violation in
     column 1 + wrong arity)."""
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "nations_dirty.csv")
-    if not os.path.exists(path):
-        with open(path, "w") as f:
+
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as f:
             for i in range(100):
                 if i % 7 == 3:
                     f.write(f"BADKEY{i},corrupted\n")
                 else:
                     f.write(f"{i},NATION {i},{i % 5},steady comment {i}\n")
-    return path
+
+    return _write_once("nations_dirty.csv", write)
 
 
 def ensure_rowgroup_parquet() -> str:
@@ -165,9 +187,7 @@ def ensure_rowgroup_parquet() -> str:
     can prune against. Deterministic (ids sorted, grp = id % 4)."""
     import pyarrow as pa
 
-    os.makedirs(_FIXDIR, exist_ok=True)
-    path = os.path.join(_FIXDIR, "rowgroups.parquet")
-    if not os.path.exists(path):
+    def write(tmp: str) -> None:
         n = 4096
         tbl = pa.table(
             {
@@ -175,5 +195,6 @@ def ensure_rowgroup_parquet() -> str:
                 "grp": pa.array([f"g{i % 4}" for i in range(n)], type=pa.string()),
             }
         )
-        pq.write_table(tbl, path, row_group_size=512)
-    return path
+        pq.write_table(tbl, tmp, row_group_size=512)
+
+    return _write_once("rowgroups.parquet", write)

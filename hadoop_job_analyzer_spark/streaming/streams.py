@@ -35,10 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_path
 from ..registry import query
-
-_ARTIFACTS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), "_artifacts"
-)
+from ..sources.fixtures import _ARTIFACTS
 
 # Self-staged stream sources (late_data, stateful_counter) are written by
 # US with a normalized session-TZ ts, so their read schema is stable no
@@ -60,11 +57,11 @@ def events_stream_dir(sf_dir: str) -> str:
     the (read-only) events.parquet.
 
     Cluster-shaped layouts (r8): when the table is itself a DIRECTORY of
-    part files — what every Spark/distributed writer produces, and what
-    the scale-stress staging produces — it already IS a valid file-source
-    root, so stream it directly; the symlink staging exists only for the
-    single-file fixture layout (where the sf dir also holds nine other
-    tables the stream must not ingest)."""
+    part files — what every Spark/distributed writer produces — it
+    already IS a valid file-source root, so stream it directly; the
+    symlink staging exists only for the single-file fixture layout
+    (where the sf dir also holds nine other tables the stream must not
+    ingest)."""
     src = table_path(sf_dir, "events")
     if os.path.isdir(src):
         return src
@@ -125,8 +122,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Last StreamingQueryProgress per key, captured at drain end — the state-
 # store observability surface (numRowsTotal, stateMemory, batch counts) a
 # cluster operator reads off the StreamingQueryListener; exposed here so
-# the scale harness (scripts/stream_scale.py) can record state growth
-# without holding the query object.
+# callers can read state growth without holding the query object.
 LAST_PROGRESS: dict[str, dict] = {}
 
 
@@ -137,8 +133,9 @@ def run_to_memory(spark: SparkSession, streamed: DataFrame, key: str, output_mod
     correctness contract (the driver hashes the rows) and for group-
     bounded aggregates at any scale, but a production deployment of an
     unbounded-output stream (per-session rows, joined streams) targets a
-    distributed sink (parquet/Kafka); the scale harness documents where
-    the driver-sink boundary is."""
+    distributed sink (parquet/Kafka); the r8-r9 streaming scale curves
+    (BASELINE.md, verification/r9_stream_axis2*.json) record where the
+    driver-sink boundary is."""
     name = f"hja_{key}_{next(_uid)}"
     q = (
         streamed.writeStream.format("memory")
@@ -536,7 +533,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication-mass axis (5.4× wall at ×64 input, state = all distinct
     ids); the bounded-state production shape is the
     ``stream_dedup_within_watermark`` execution twin below (hash-equal
-    by test, measured in the same harness).
+    by test, measured in the same program: BASELINE.md "Streaming scale
+    curves").
 
     Oracle: per-type COUNT(DISTINCT event_id) — dedup of the doubled
     stream keeps exactly one row per event_id.
@@ -562,15 +560,15 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     two SFs by tests/test_streaming.py::test_stream_dedup_twin_hash_equal).
 
     Unregistered by policy (SURVEY §2 surface frozen; same discipline as
-    the salted window twins): exercised by tests and by
-    scripts/stream_scale.py, which records its state_rows staying
-    watermark-bounded while the plain key's grows with the backlog.
+    the salted window twins). Its state_rows stay watermark-bounded
+    while the plain key's grow with the backlog
+    (verification/r9_stream_axis2*.json).
 
-    Horizon guidance (r10 dial sweep, scripts/dedup_wm_tradeoff.py /
-    BASELINE.md): the within-watermark bookkeeping costs a
-    horizon-INDEPENDENT wall premium (measured flat across 30 min / 2 h /
-    8 h at two scales: it is per-id expiry bookkeeping + the commit-time
-    eviction scan, not eviction-count work) — zero at 12.8 M ids, ~1.8×
+    Horizon guidance (r10 dial sweep, BASELINE.md and
+    verification/r10_dedup_wm_tradeoff.json): the within-watermark
+    bookkeeping costs a horizon-INDEPENDENT wall premium (measured flat
+    across 30 min / 2 h / 8 h at two scales: it is per-id expiry
+    bookkeeping + the commit-time eviction scan, not eviction-count work) — zero at 12.8 M ids, ~1.8×
     at 51 M — while RETAINED state is exactly proportional to the
     horizon (8.3 k / 34.8 k / 145.7 k rows vs 6.4 M unbounded at x64).
     So pick the horizon from the DUPLICATE-ARRIVAL-LAG bound alone (the
@@ -579,19 +577,9 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     as soon as the id universe outgrows the store — which is always, on
     an unbounded stream.
     """
-    return stream_dedup_within_watermark_wm(spark, sf_dir, "2 hours")
-
-
-def stream_dedup_within_watermark_wm(
-    spark: SparkSession, sf_dir: str, watermark: str
-) -> DataFrame:
-    """Horizon-parameterized body of stream_dedup_within_watermark — the
-    dial scripts/dedup_wm_tradeoff.py sweeps (same discipline as
-    stream_stream_join_wm: the measured object is the twin itself, so
-    the sweep cannot drift from the pinned semantics)."""
     ev = read_events_stream(spark, sf_dir)
     doubled = ev.union(ev)
-    deduped = doubled.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    deduped = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_events"))
@@ -712,23 +700,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered rows. Append mode (inner join emits exactly-once as
     matches form). Batch twin: the identical join over the static
     table, asserted equal in tests (the driver sees rows-only).
-    """
-    return stream_stream_join_wm(spark, sf_dir, "1 hour")
 
-
-def stream_stream_join_wm(spark: SparkSession, sf_dir: str, watermark: str) -> DataFrame:
-    """Watermark-parameterized body of `stream_stream_join`, which calls
-    it with "1 hour" (same discipline as
-    `stream_dedup_within_watermark_wm`). The parameter exists for the
-    measured watermark-vs-state tradeoff (VERDICT r8 task #3): the
-    registered key's 100 TB story is "the watermark bound — not the data
-    size — is what you tune", and this parameter is how that claim is
-    measured rather than asserted (`scripts/wm_tradeoff.py`; curves in
-    BASELINE.md).
-    Semantics caveat the curve must record: a tighter watermark bounds
-    join STATE but also drops later-arriving rows — rows_out and
-    numRowsDroppedByWatermark move together, which is exactly the
-    correctness/cost dial a cluster operator sets.
+    The 1-hour watermark is the dial a cluster operator tunes, not the
+    data size: join state rows scale with the horizon at every scale
+    (10 min / 1 h / 4 h measured in verification/r9_wm_tradeoff.json,
+    curves in BASELINE.md). A tighter watermark bounds STATE but also
+    drops later-arriving rows — rows_out and numRowsDroppedByWatermark
+    move together.
     """
     clicks = (
         read_events_stream(spark, sf_dir)
@@ -738,7 +716,7 @@ def stream_stream_join_wm(spark: SparkSession, sf_dir: str, watermark: str) -> D
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "1 hour")
     )
     buys = (
         read_events_stream(spark, sf_dir)
@@ -748,7 +726,7 @@ def stream_stream_join_wm(spark: SparkSession, sf_dir: str, watermark: str) -> D
             F.col("event_id").alias("buy_id"),
             F.col("ts").alias("buy_ts"),
         )
-        .withWatermark("buy_ts", watermark)
+        .withWatermark("buy_ts", "1 hour")
     )
     joined = clicks.join(
         buys,
@@ -1015,8 +993,8 @@ def docs_stream_dir(sf_dir: str) -> str:
     Directory-shaped tables stream directly (same r8 fix as
     events_stream_dir): a symlink to a DIRECTORY would be listed as a
     subdirectory by the file source and silently yield an EMPTY stream —
-    the failure mode the stream-scale harness caught at the inflated
-    dirs (0 rows in 0.17 s instead of a crash)."""
+    a failure measured at the r8 inflated dirs (0 rows in 0.17 s instead
+    of a crash)."""
     src = table_path(sf_dir, "documents")
     if os.path.isdir(src):
         return src

@@ -326,7 +326,7 @@ def test_fingerprint_per_doc_twin_hash_equals_registered(spark, sf_dir):
     reproduce the registered collapse-identical-texts-first plan
     row-for-row: the r10 swap exploits fingerprint being a pure function
     of text — an execution strategy, not a semantics change
-    (scripts/fingerprint_ab.py: 1.53× → 0.16× DuckDB at x64)."""
+    (verification/r10_fingerprint_ab.json: 1.53× → 0.16× DuckDB at x64)."""
     from hadoop_job_analyzer_spark.operators.textops import (
         text_fingerprint_per_doc,
     )

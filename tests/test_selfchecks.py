@@ -6,6 +6,10 @@ tests hold them to a real standard.
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from hadoop_job_analyzer_spark.catalog import load_table
 from hadoop_job_analyzer_spark.registry import queries
 from hadoop_job_analyzer_spark.sources.fixtures import jobs_records
@@ -71,9 +75,9 @@ def test_fn_map_ops_matches_generator(spark, sf_dir):
 
 def test_compaction_reduces_file_count(spark, sf_dir):
     from hadoop_job_analyzer_spark.registry import queries
-    import glob, os
+    from hadoop_job_analyzer_spark.sources.fixtures import _ARTIFACTS as art
+    import glob
     queries()["sink_compact_small_files"](spark, sf_dir).count()
-    art = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "_artifacts")
     n_frag = len(glob.glob(os.path.join(art, "compact_fragmented", "*.parquet")))
     n_tidy = len(glob.glob(os.path.join(art, "compact_tidy", "*.parquet")))
     assert n_frag == 64 and n_tidy == 4, (n_frag, n_tidy)
@@ -325,3 +329,60 @@ def test_bench_duckdb_control_draw():
     )
     # the binding interpretation travels in the record itself
     assert "box-slow" in rec["read"] and "JVM" in rec["read"]
+
+
+@pytest.mark.parametrize("writer", ["ensure_jobs_jsonl", "ensure_jobs_log"])
+def test_fixture_write_interrupted_leaves_no_file(monkeypatch, tmp_path, writer):
+    """A fixture writer that dies mid-file must leave nothing at the final
+    path (a truncated file would be accepted by every later run); the
+    next call then writes the whole file."""
+    from hadoop_job_analyzer_spark.sources import fixtures
+
+    monkeypatch.setattr(fixtures, "_FIXDIR", str(tmp_path))
+    recs = fixtures.jobs_records()
+
+    def dying_records():
+        yield from recs[:10]
+        raise RuntimeError("killed mid-write")
+
+    monkeypatch.setattr(fixtures, "jobs_records", dying_records)
+    with pytest.raises(RuntimeError):
+        getattr(fixtures, writer)()
+    assert os.listdir(tmp_path) == []
+
+    monkeypatch.setattr(fixtures, "jobs_records", lambda: recs)
+    path = getattr(fixtures, writer)()
+    lines = open(path).read().splitlines()
+    assert sum("WARN" not in ln for ln in lines) == len(recs) == fixtures.N_JOBS
+    assert os.listdir(tmp_path) == [os.path.basename(path)]
+
+
+def test_dpp_layout_follows_regenerated_events(spark, sf_dir, tmp_path):
+    """join_dpp_partitioned must not serve a partitioned layout written
+    from an earlier events table at the same sf path: regenerate
+    events.parquet between two calls and the second result must still
+    match its oracle over the new file."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_job_analyzer_spark.catalog import TABLES, table_path
+    from hadoop_job_analyzer_spark.oracle_check import compare
+    from hadoop_job_analyzer_spark.registry import oracle_sql
+
+    d = tmp_path / "dpp_sf"
+    d.mkdir()
+    for t in TABLES:
+        if t != "events":
+            os.symlink(table_path(sf_dir, t), table_path(str(d), t))
+    events = table_path(sf_dir, "events")
+    full = pq.read_table(events)
+    pq.write_table(
+        full.filter(pc.not_equal(full["event_type"], "purchase")), table_path(str(d), "events")
+    )
+    key = "join_dpp_partitioned"
+    compare(queries()[key](spark, str(d)), oracle_sql()[key], str(d), key)
+
+    shutil.copyfile(events, table_path(str(d), "events"))
+    compare(queries()[key](spark, str(d)), oracle_sql()[key], str(d), key)

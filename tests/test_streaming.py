@@ -241,8 +241,8 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
 
     # Same contract for the documents stream: before the fix, a symlink
     # to a directory-shaped table yielded a silently EMPTY stream (the
-    # worst failure mode — 0 rows, no crash; caught by the stream-scale
-    # harness at the inflated dirs).
+    # worst failure mode — 0 rows, no crash; first seen at the r8
+    # inflated dirs).
     from hadoop_job_analyzer_spark.streaming.streams import docs_stream_dir
 
     load_table(spark, sf_dir, "documents").repartition(3).write.parquet(
@@ -255,8 +255,8 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
 
 
 def test_state_operator_accounting(spark, sf_dir):
-    """Pin the state-store accounting the scale harness reads (r9; the
-    stateOperators[0] trap): lastProgress.stateOperators is a LIST with
+    """Pin the state-store accounting LAST_PROGRESS exposes (r9; the
+    stateOperators[0] trap, recorded in verification/r9_stream_axis2*.json): lastProgress.stateOperators is a LIST with
     one entry per stateful operator, and per-operator numRowsTotal must
     equal the operator's designed key cardinality.
 
@@ -265,7 +265,7 @@ def test_state_operator_accounting(spark, sf_dir):
     - stream_dedup: TWO state operators (complete-mode agg first in
       progress order, then dropDuplicates) — the dedup operator's rows
       must equal the DISTINCT event_id count, the agg's the type count;
-      summing is the only correct total (what the harness now does).
+      summing is the only correct total.
     """
     from hadoop_job_analyzer_spark.streaming.streams import LAST_PROGRESS
 
@@ -285,7 +285,7 @@ def test_state_operator_accounting(spark, sf_dir):
     rows = sorted(o["numRowsTotal"] for o in ops)
     assert rows == sorted([n_types, n_ids]), (
         f"per-operator state rows {rows} != designed cardinalities "
-        f"[{n_types}, {n_ids}] — the harness's summed accounting would drift"
+        f"[{n_types}, {n_ids}] — a summed state-row total would drift"
     )
 
 
@@ -307,9 +307,9 @@ def test_custom_sessionize_bridge_equals_memory_sink(spark, sf_dir):
 
 
 def test_bridge_records_progress_and_is_distributed(spark, sf_dir):
-    """The bridge must (a) capture LAST_PROGRESS like run_to_memory — the
-    scale harness reads state accounting off it — and (b) land rows as
-    parquet FILES (executor-written), not a driver-held table."""
+    """The bridge must (a) capture LAST_PROGRESS like run_to_memory, so
+    its state accounting is readable, and (b) land rows as parquet
+    FILES (executor-written), not a driver-held table."""
     from hadoop_job_analyzer_spark.streaming.streams import (
         LAST_PROGRESS,
         stream_custom_sessionize_bridged,
@@ -320,8 +320,8 @@ def test_bridge_records_progress_and_is_distributed(spark, sf_dir):
     assert out.count() > 0
     prog = LAST_PROGRESS.get("stream_custom_sessionize_bridged")
     assert prog is not None and prog.get("stateOperators"), (
-        "bridge drain recorded no StreamingQueryProgress — the scale "
-        "harness's state accounting would read nothing"
+        "bridge drain recorded no StreamingQueryProgress — its state "
+        "accounting would read nothing"
     )
     # parquet files on disk, readable by a fresh scan = distributed sink
     files = [f for f in out.inputFiles() if f.endswith(".parquet")]
