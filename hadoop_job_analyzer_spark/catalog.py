@@ -11,9 +11,10 @@ has shipped as parquet timestamp[ns] in some fixture generations (with
 epoch-nanoseconds, converted by INTEGER division to microseconds —
 float division corrupts the low bits, SURVEY.md §0.2) and as
 timestamp[us] in others (arrives TIMESTAMP_NTZ, cast to session-TZ
-timestamp). ``load_table`` branches on the observed dtype so a fixture
-regeneration can never crash every events consumer again (round-2
-post-mortem, VERDICT r2 #1).
+timestamp). ``normalize_events_ts`` branches on the observed dtype so a
+fixture regeneration can never crash every events consumer again
+(round-2 post-mortem, VERDICT r2 #1); ``load_table`` applies it to
+batch frames and ``streams.read_events_stream`` to stream frames.
 """
 
 from __future__ import annotations
@@ -78,15 +79,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
-        # The fixture has shipped ts as either timestamp[ns] (arrives as a
-        # long of epoch-ns under nanosAsLong) or timestamp[us] (arrives as
-        # TIMESTAMP_NTZ). Normalize both to session-TZ TIMESTAMP; dtype
-        # branch so a fixture regeneration can't crash every consumer.
-        ts_type = dict(df.dtypes).get("ts", "")
-        if ts_type in ("bigint", "long"):
-            # Integer-divide ns→µs: float division corrupts the low bits
-            # (epoch-ns exceeds double's 53-bit exact range).
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type.startswith("timestamp_ntz"):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_events_ts(df)
     return df.select(*COLUMNS[name])
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """events.ts as session-TZ TIMESTAMP, batch or streaming frame alike.
+
+    The fixture has shipped ts as either timestamp[ns] (arrives as a long
+    of epoch-ns under nanosAsLong) or timestamp[us] (arrives as
+    TIMESTAMP_NTZ); branch on the frame's declared dtype so a fixture
+    regeneration can't crash every consumer."""
+    ts_type = dict(df.dtypes).get("ts", "")
+    if ts_type in ("bigint", "long"):
+        # Integer-divide ns→µs: float division corrupts the low bits
+        # (epoch-ns exceeds double's 53-bit exact range).
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type.startswith("timestamp_ntz"):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df

@@ -475,8 +475,8 @@ def sink_metrics_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metrics-backend sink: any aggregation rendered as Graphite
     plaintext-protocol lines ``path value unix_ts`` — the upstream's
     "emit to metrics backend" behavior (SURVEY.md §0.1) re-expressed as
-    a formatting stage (string assembly only; no network in-sandbox —
-    at scale the lines stream out via foreachBatch/socket sink).
+    a formatting stage (string assembly only; the push of such lines to
+    a Carbon relay is ops_stream_session_report's HJA_CARBON_TARGET leg).
 
     Determinism across engines: the count renders from a BIGINT; the
     value sum follows the DECIMAL(38,6) policy (_common.py) and renders
@@ -486,31 +486,14 @@ def sink_metrics_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one map-side-partial groupBy, then a pure projection —
     the explode-to-two-metrics stack is per-row, shuffle-free.
     """
-    ev = load_table(spark, sf_dir, "events")
-    agg = metrics_hourly_agg(ev)
-    return metrics_lines_projection(agg)
-
-
-def metrics_hourly_agg(events: DataFrame) -> DataFrame:
-    """The hourly metrics aggregation behind sink_metrics_lines, shared
-    with the streaming emitter (streaming/streams.py
-    stream_metrics_lines): one map-side-partial groupBy to
-    (hour, type) cells — works identically over a batch or a streaming
-    events frame (complete mode, no watermark needed)."""
-    return events.groupBy(
-        F.date_trunc("hour", "ts").alias("ts_hour"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_value"),
+    agg = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("hour", "ts").alias("ts_hour"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(38,6)")).alias("sum_value"),
+        )
     )
-
-
-def metrics_lines_projection(agg: DataFrame) -> DataFrame:
-    """Graphite plaintext rendering over a (ts_hour, event_type,
-    n_events, sum_value) frame — pure per-row projection (stack to two
-    metrics, string assembly), shuffle-free; shared between the batch
-    key and the streaming socket emitter so the wire format is defined
-    exactly once."""
     m = agg.select(
         "ts_hour",
         "event_type",

@@ -5,18 +5,20 @@ a hand-rolled micro-batch loop [R-M]. Structured Streaming is that
 loop done right: the same logical plans compiled incrementally, with
 watermarks for late data and a state store for stateful ops.
 
-Test harness pattern (driver-compatible): file source →
-``trigger(availableNow=True)`` → memory sink → return the sink table
-as a DataFrame. The driver sees rows-only; our tests assert the
-stronger batch-equivalence self-oracle (each streaming result ==
-its batch twin; SURVEY.md §5.4).
+Test harness pattern (driver-compatible): file source → ``_drain``
+(an availableNow trigger; the one drain every key goes through, which
+records the query's last progress in ``LAST_PROGRESS``) → memory sink
+→ return the sink table as a DataFrame. The driver sees rows-only;
+our tests assert the stronger batch-equivalence self-oracle (each
+streaming result == its batch twin; SURVEY.md §5.4).
 
 Streaming reads declare the schema explicitly (file streams require
 it); because a DDL schema is fixed at plan build, ``read_events_stream``
-inspects the fixture's physical ts type (pyarrow footer read) and
-declares BIGINT + ns→µs integer division or TIMESTAMP_NTZ + cast —
-the streaming twin of catalog.load_table's dtype guard. Self-staged
-sources re-write a normalized ts and use EVENTS_NORM_SCHEMA.
+reads the fixture's physical ts type off the parquet footer to pick the
+declared ts type (BIGINT or TIMESTAMP_NTZ), then applies
+``catalog.normalize_events_ts`` — the same ns→µs recipe batch loads
+use. Self-staged sources re-write a normalized ts and use
+EVENTS_NORM_SCHEMA.
 
 Scale: in production these run continuously against arriving files/
 Kafka; state (windows, dedup keys, sessions) is partitioned by group
@@ -32,8 +34,9 @@ from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-from ..catalog import load_table, table_path
+from ..catalog import load_table, normalize_events_ts, table_path
 from ..registry import query
 from ..sources.fixtures import _ARTIFACTS
 
@@ -46,29 +49,29 @@ EVENTS_NORM_SCHEMA = (
 
 _uid = count()
 
-# Rows per sendall() in run_to_socket_lines — bounds the executor-side
-# buffer per connection at O(chunk) regardless of partition size
+# Rows per sendall() in _line_sender — bounds the executor-side buffer
+# per connection at O(chunk) regardless of partition size
 # (~60 B/Graphite line → ~500 KB per send at 8192 rows).
 _SOCKET_CHUNK_ROWS = 8192
 
 
-def events_stream_dir(sf_dir: str) -> str:
-    """File streams need a DIRECTORY source; stage one with a symlink to
-    the (read-only) events.parquet.
+def _stream_dir(sf_dir: str, table: str) -> str:
+    """A file-stream source DIRECTORY holding exactly one table.
 
-    Cluster-shaped layouts (r8): when the table is itself a DIRECTORY of
-    part files — what every Spark/distributed writer produces — it
-    already IS a valid file-source root, so stream it directly; the
-    symlink staging exists only for the single-file fixture layout
-    (where the sf dir also holds nine other tables the stream must not
-    ingest)."""
-    src = table_path(sf_dir, "events")
+    A directory-shaped table (part files — what every Spark/distributed
+    writer produces) already IS a valid file-source root, so it streams
+    directly; a symlink to a directory would be listed as a subdirectory
+    and silently yield an EMPTY stream (0 rows in 0.17 s instead of a
+    crash, first seen at the r8 inflated dirs). A single-file table gets
+    a staging dir with a symlink to it, because the sf dir also holds the
+    other tables, which the stream must not ingest."""
+    src = table_path(sf_dir, table)
     if os.path.isdir(src):
         return src
     tag = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(_ARTIFACTS, f"events_src_{tag}")
+    d = os.path.join(_ARTIFACTS, f"{table}_src_{tag}")
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
+    link = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
     return d
@@ -77,8 +80,8 @@ def events_stream_dir(sf_dir: str) -> str:
 def _events_ts_is_long(sf_dir: str) -> bool:
     """True when the fixture stores ts as int64/timestamp[ns] (arrives as
     a long of epoch-ns under nanosAsLong); False for timestamp[us].
-    Streaming DDL schemas are declared up front, so the branch has to
-    happen at plan-build time — same dtype guard as catalog.load_table."""
+    Streaming DDL schemas are declared up front, so the ts type has to be
+    known at plan-build time; a footer read costs no Spark job."""
     import glob
 
     import pyarrow.parquet as pq
@@ -97,26 +100,16 @@ def _events_ts_is_long(sf_dir: str) -> bool:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events table as a file-source stream, ts normalized to timestamp."""
-    if _events_ts_is_long(sf_dir):
-        raw = (
-            spark.readStream.schema(
-                "event_id BIGINT, ts BIGINT, user_id BIGINT, "
-                "event_type STRING, value DOUBLE, props STRING"
-            )
-            .format("parquet")
-            .load(events_stream_dir(sf_dir))
-        )
-        # Integer ns→µs division (float corrupts the low bits).
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    ts_type = "BIGINT" if _events_ts_is_long(sf_dir) else "TIMESTAMP_NTZ"
     raw = (
         spark.readStream.schema(
-            "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
+            f"event_id BIGINT, ts {ts_type}, user_id BIGINT, "
             "event_type STRING, value DOUBLE, props STRING"
         )
         .format("parquet")
-        .load(events_stream_dir(sf_dir))
+        .load(_stream_dir(sf_dir, "events"))
     )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_events_ts(raw)
 
 
 # Last StreamingQueryProgress per key, captured at drain end — the state-
@@ -126,8 +119,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 LAST_PROGRESS: dict[str, dict] = {}
 
 
+def _drain(writer: DataStreamWriter, key: str) -> None:
+    """Run a configured stream writer over the whole backlog
+    (availableNow), block until it terminates, and record its last
+    progress under ``key`` in LAST_PROGRESS."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    p = q.lastProgress
+    if p:
+        LAST_PROGRESS[key] = p
+
+
 def run_to_memory(spark: SparkSession, streamed: DataFrame, key: str, output_mode: str) -> DataFrame:
-    """Run the backlog with availableNow into a memory sink; return the table.
+    """Drain the backlog into a memory sink; return the table.
 
     The memory sink materializes results driver-side — right for the
     correctness contract (the driver hashes the rows) and for group-
@@ -137,114 +141,8 @@ def run_to_memory(spark: SparkSession, streamed: DataFrame, key: str, output_mod
     (BASELINE.md, verification/r9_stream_axis2*.json) record where the
     driver-sink boundary is."""
     name = f"hja_{key}_{next(_uid)}"
-    q = (
-        streamed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        p = q.lastProgress
-        if p:
-            LAST_PROGRESS[key] = p
-    except Exception:
-        pass
+    _drain(streamed.writeStream.format("memory").queryName(name).outputMode(output_mode), key)
     return spark.table(name)
-
-
-def run_to_parquet_bridge(
-    spark: SparkSession, streamed: DataFrame, key: str, output_mode: str = "update"
-) -> DataFrame:
-    """Drain the backlog through the PRODUCTION-shaped sink: foreachBatch →
-    parquet append. Each micro-batch is written by the EXECUTORS (a
-    distributed parquet job per batch); the driver holds only batch
-    metadata — nothing output-mass-sized.
-
-    This is the documented answer to run_to_memory's driver-sink bound:
-    the memory sink collects every emitted row driver-side and dies on
-    spark.driver.maxResultSize once unbounded-output streams (per-session
-    rows, joined streams) reach ~1 GB collected — measured live at
-    usershift_x256 where stream_custom_sessionize OOMs through the memory
-    sink but drains 24.4 M session rows in 102 s through this bridge
-    (BASELINE.md r9 state-store A/B). On a real cluster the same shape
-    targets parquet-on-object-store or Kafka; foreachBatch gives each
-    batch a full batch-DataFrame writer, so the sink inherits every
-    batch-side optimization (partitioned layout, compaction, dynamic
-    overwrite) without a custom Sink implementation.
-
-    Returns the accumulated parquet as a batch DataFrame (UPDATE-mode
-    streams land every emission, so consumers apply the same
-    last-snapshot reduction as the memory-sink path — see
-    _custom_sessionize_final).
-
-    Exactly-once: foreachBatch is at-least-once (a failed-then-retried
-    batch re-invokes emit with the SAME batch_id), so each batch lands
-    in its own _batch_id partition under DYNAMIC partition overwrite —
-    a retry replaces its own partition instead of appending duplicates
-    (r10 ADVICE: the previous mode('append') silently double-counted on
-    retry for any consumer without a last-snapshot reduction). A stream
-    that emits ZERO micro-batches (empty/absent source) never creates
-    out_dir; that returns an empty DataFrame with the stream's schema
-    instead of an unrelated path-not-found AnalysisException."""
-    out_dir = os.path.join(_ARTIFACTS, f"bridge_{key}_{next(_uid)}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    # r11 ADVICE: withColumn would silently OVERWRITE a user column named
-    # _batch_id and the read-back select would then return the partition
-    # value instead of the data — fail loudly at bridge setup instead.
-    if "_batch_id" in streamed.columns:
-        raise ValueError(
-            f"run_to_parquet_bridge({key!r}): the bridged stream already "
-            "carries a '_batch_id' column, which collides with the bridge's "
-            "retry-idempotence partition column; rename it before bridging"
-        )
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        streamed.writeStream.foreachBatch(emit)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        p = q.lastProgress
-        if p:
-            LAST_PROGRESS[key] = p
-    except Exception:
-        pass
-    if not os.path.exists(out_dir):
-        return spark.createDataFrame([], streamed.schema)
-    return spark.read.parquet(out_dir).select(*streamed.columns)
-
-
-def stream_metrics_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of the batch sink_metrics_lines key (same hourly
-    aggregation, same Graphite plaintext rendering — both imported from
-    operators/scans.py so the wire format is defined once): the events
-    backlog as a file-source stream, aggregated without watermark
-    (complete mode re-emits the full snapshot per micro-batch, which is
-    what a Carbon relay expects from a periodic reporter). Unregistered:
-    the batch key owns the oracle; this frame exists to be DRAINED over
-    a real socket by run_to_socket_lines — closing the upstream's
-    emit-to-metrics-backend boundary with actual bytes on a wire
-    (VERDICT r10 task #4) instead of a formatting stage that stops at a
-    DataFrame."""
-    from hadoop_job_analyzer_spark.operators.scans import (
-        metrics_hourly_agg,
-        metrics_lines_projection,
-    )
-
-    return metrics_lines_projection(metrics_hourly_agg(read_events_stream(spark, sf_dir)))
 
 
 def _line_sender(host: str, port: int):
@@ -277,45 +175,6 @@ def _line_sender(host: str, port: int):
                 sock.close()
 
     return send
-
-
-def run_to_socket_lines(
-    spark: SparkSession,
-    streamed: DataFrame,
-    key: str,
-    host: str,
-    port: int,
-    output_mode: str = "complete",
-) -> None:
-    """Drain a streaming frame with a `line` column over TCP in the
-    Carbon/Graphite plaintext protocol (newline-terminated ``path value
-    unix_ts`` lines): foreachBatch → foreachPartition, so each EXECUTOR
-    partition opens its own connection and ships its rows — the
-    production metrics-relay shape (no driver collect; at cluster scale
-    every executor talks to the relay pool directly, and partition
-    count, not output mass, bounds connection fan-out). availableNow
-    processes the whole backlog and terminates.
-
-    Delivery is at-least-once (a retried batch re-sends its lines) —
-    matching Carbon's own semantics, where the relay deduplicates by
-    (path, timestamp) last-write-wins."""
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select("line").foreachPartition(_line_sender(host, port))
-
-    q = (
-        streamed.writeStream.foreachBatch(emit)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        p = q.lastProgress
-        if p:
-            LAST_PROGRESS[key] = p
-    except Exception:
-        pass
 
 
 @query(
@@ -502,15 +361,13 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(F.col("win.start").alias("window_start"), F.col("n_events"))
         )
-        q = (
+        _drain(
             agg.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            "stream_late_data",
         )
-        q.awaitTermination()
 
     f1.coalesce(1).write.mode("overwrite").parquet(os.path.join(src_dir, "f1"))
     run_once()
@@ -531,10 +388,13 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count). State holds one key per id EVER SEEN — the r8 stream-scale
     program measured this as the family's honest climb on the
     duplication-mass axis (5.4× wall at ×64 input, state = all distinct
-    ids); the bounded-state production shape is the
-    ``stream_dedup_within_watermark`` execution twin below (hash-equal
-    by test, measured in the same program: BASELINE.md "Streaming scale
-    curves").
+    ids). The bounded-state shape, ``dropDuplicatesWithinWatermark``
+    over a 2-hour horizon, was measured in the same program: hash-equal
+    here (the duplicates are exact copies with identical event time),
+    with retained state proportional to the horizon instead of the
+    stream, and a horizon-independent wall premium (BASELINE.md
+    "Streaming scale curves", verification/r9_stream_axis2*.json,
+    verification/r10_dedup_wm_tradeoff.json).
 
     Oracle: per-type COUNT(DISTINCT event_id) — dedup of the doubled
     stream keeps exactly one row per event_id.
@@ -544,46 +404,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_events"))
     return run_to_memory(spark, agg, "stream_dedup", "complete")
-
-
-def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Execution twin of ``stream_dedup`` with BOUNDED state (r8): the
-    dedup key set is evicted as the event-time watermark advances
-    (``dropDuplicatesWithinWatermark``), so state holds only the ids
-    inside the 2-hour horizon instead of every id ever seen — the
-    difference between O(stream length) and O(watermark window) state,
-    i.e. the shape that survives 100 TB/day. Chained stateful operators
-    (within-watermark dedup → complete-mode global agg) are supported
-    natively in Spark 4.x; the duplicates here are exact copies with
-    identical event time, so they always fall inside the horizon and
-    the result is row-for-row equal to the unbounded key's (pinned at
-    two SFs by tests/test_streaming.py::test_stream_dedup_twin_hash_equal).
-
-    Unregistered by policy (SURVEY §2 surface frozen; same discipline as
-    the salted window twins). Its state_rows stay watermark-bounded
-    while the plain key's grow with the backlog
-    (verification/r9_stream_axis2*.json).
-
-    Horizon guidance (r10 dial sweep, BASELINE.md and
-    verification/r10_dedup_wm_tradeoff.json): the within-watermark
-    bookkeeping costs a horizon-INDEPENDENT wall premium (measured flat
-    across 30 min / 2 h / 8 h at two scales: it is per-id expiry
-    bookkeeping + the commit-time eviction scan, not eviction-count work) — zero at 12.8 M ids, ~1.8×
-    at 51 M — while RETAINED state is exactly proportional to the
-    horizon (8.3 k / 34.8 k / 145.7 k rows vs 6.4 M unbounded at x64).
-    So pick the horizon from the DUPLICATE-ARRIVAL-LAG bound alone (the
-    widest lag between copies you must still dedup): narrowing it
-    further buys nothing on wall, and the bounded twin pays for itself
-    as soon as the id universe outgrows the store — which is always, on
-    an unbounded stream.
-    """
-    ev = read_events_stream(spark, sf_dir)
-    doubled = ev.union(ev)
-    deduped = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_events"))
-    return run_to_memory(spark, agg, "stream_dedup_within_watermark", "complete")
 
 
 @query(
@@ -671,8 +491,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def emit(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = ev.writeStream.foreachBatch(emit).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(ev.writeStream.foreachBatch(emit), "stream_foreach_batch")
     return spark.read.parquet(out_dir)
 
 
@@ -778,33 +597,11 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(spark, agg, "stream_static_join", "complete")
 
 
-def _custom_sessionize_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staging + the applyInPandasWithState pipeline of
-    stream_custom_sessionize, SHARED between the registered memory-sink
-    key and the bridged execution twin so a sink A/B exercises the
-    identical stateful plan."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(_ARTIFACTS, f"sess_src_{tag}")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
-    batch = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    batch.where(F.col("ts") < split).coalesce(1).write.parquet(os.path.join(src, "f0"))
-    batch.where(F.col("ts") >= split).coalesce(1).write.parquet(os.path.join(src, "f1"))
-
-    ev = (
-        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(src, "*"))
-    )
-    return apply_custom_sessionize(ev)
-
-
 def apply_custom_sessionize(ev: DataFrame) -> DataFrame:
     """The applyInPandasWithState sessionize operator over any streaming
-    (user_id, ts) frame — factored out of _custom_sessionize_emitted so
-    the checkpoint-resume drill (tests/test_streaming.py) can run the
-    IDENTICAL stateful pipeline over its own staged backlog."""
+    (user_id, ts) frame — factored out of stream_custom_sessionize so
+    the checkpoint-resume drills (tests/test_streaming.py) can run the
+    IDENTICAL stateful pipeline over their own staged backlogs."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -854,9 +651,11 @@ def apply_custom_sessionize(ev: DataFrame) -> DataFrame:
 
 
 def _custom_sessionize_final(allrows: DataFrame) -> DataFrame:
-    """Final answer from the raw update-mode emissions: last snapshot per
-    session (n_events monotone per (user, session_start); closed sessions
-    are emitted exactly once)."""
+    """Final answer from the raw update-mode emissions of
+    apply_custom_sessionize: last snapshot per session (n_events
+    monotone per (user, session_start); closed sessions are emitted
+    exactly once). Shared with the checkpoint-resume drills, which
+    reduce their own drains' emissions the same way."""
     w = Window.partitionBy("user_id", "session_start").orderBy(
         F.col("n_events").desc(), F.col("session_end").desc()
     )
@@ -865,22 +664,6 @@ def _custom_sessionize_final(allrows: DataFrame) -> DataFrame:
         .where(F.col("_rn") == 1)
         .select("user_id", "session_start", "session_end", "n_events")
     )
-
-
-def stream_custom_sessionize_bridged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unregistered execution twin of stream_custom_sessionize (SURVEY §2
-    surface frozen): the SAME stateful pipeline drained through the
-    foreachBatch→parquet bridge instead of the memory sink. This is the
-    shape that survives usershift_x256 (24.4 M session rows in 102 s,
-    BASELINE.md r9) where the driver-held memory sink OOMs; pinned
-    hash-equal to the memory-sink key at test SF in
-    tests/test_streaming.py::test_custom_sessionize_bridge_equals_memory_sink.
-    """
-    emitted = _custom_sessionize_emitted(spark, sf_dir)
-    allrows = run_to_parquet_bridge(
-        spark, emitted, "stream_custom_sessionize_bridged", "update"
-    )
-    return _custom_sessionize_final(allrows)
 
 
 @query(
@@ -927,11 +710,23 @@ def stream_custom_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At scale state lives per group key in the executor state stores
     (RocksDB), exactly like the built-in operators; the Python function
-    sees one user's rows per call, Arrow-batched. Pipeline + final
-    reduction live in _custom_sessionize_emitted/_custom_sessionize_final,
-    shared with the production-sink twin stream_custom_sessionize_bridged.
+    sees one user's rows per call, Arrow-batched.
     """
-    emitted = _custom_sessionize_emitted(spark, sf_dir)
+    tag = os.path.basename(os.path.normpath(sf_dir))
+    src = os.path.join(_ARTIFACTS, f"sess_src_{tag}")
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src, exist_ok=True)
+    batch = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    split = F.lit("2024-01-16 00:00:00").cast("timestamp")
+    batch.where(F.col("ts") < split).coalesce(1).write.parquet(os.path.join(src, "f0"))
+    batch.where(F.col("ts") >= split).coalesce(1).write.parquet(os.path.join(src, "f1"))
+
+    ev = (
+        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(src, "*"))
+    )
+    emitted = apply_custom_sessionize(ev)
     allrows = run_to_memory(spark, emitted, "stream_custom_sessionize", "update")
     return _custom_sessionize_final(allrows)
 
@@ -987,26 +782,6 @@ def stream_windowed_apdex(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOCS_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
 
 
-def docs_stream_dir(sf_dir: str) -> str:
-    """documents.parquet staged as a file-stream directory (symlink).
-
-    Directory-shaped tables stream directly (same r8 fix as
-    events_stream_dir): a symlink to a DIRECTORY would be listed as a
-    subdirectory by the file source and silently yield an EMPTY stream —
-    a failure measured at the r8 inflated dirs (0 rows in 0.17 s instead
-    of a crash)."""
-    src = table_path(sf_dir, "documents")
-    if os.path.isdir(src):
-        return src
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(_ARTIFACTS, f"docs_src_{tag}")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "documents.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return d
-
-
 @query(
     "stream_near_dedup_norm",
     oracle="""
@@ -1032,8 +807,8 @@ def stream_near_dedup_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the state store; with a watermarked ingest time,
     dropDuplicatesWithinWatermark bounds it at 100 TB/day.
     """
-    raw = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(docs_stream_dir(sf_dir))
+    raw = spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(
+        _stream_dir(sf_dir, "documents")
     )
     doubled = raw.union(raw)
     canon = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), "[0-9]+", "0")))
@@ -1118,12 +893,15 @@ def ops_stream_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window's window start; gap rule at µs resolution matches
     the stream_session_window oracle).
 
-    Emit boundary: set HJA_CARBON_TARGET="host:port" and the drain runs
-    through a foreachBatch bridge that pushes the rendered lines to that
-    TCP endpoint from the executors, per snapshot (at-least-once, Carbon
-    last-write-wins) — the report actually ships bytes to a relay, not
-    just a DataFrame. The returned frame and the oracle are unchanged
-    either way (test: tests/test_streaming.py loopback drill).
+    Emit boundary: set HJA_CARBON_TARGET="host:port" and, after the
+    drain, the returned frame's ``line`` column is pushed once to that
+    TCP endpoint from the executors (_line_sender, chunked) — the report
+    actually ships bytes to a relay, not just a DataFrame, and the wire
+    carries exactly the rows the oracle grades. The fixture backlog
+    drains in one availableNow micro-batch (no maxFilesPerTrigger), so
+    one push after the drain is the per-snapshot push of a periodic
+    reporter (Carbon dedups by (path, ts), last write wins). Test:
+    tests/test_streaming.py loopback drill.
     """
     ev = read_events_stream(spark, sf_dir)
     sess = (
@@ -1144,15 +922,6 @@ def ops_stream_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tol",
         )
     )
-    # Emit boundary (VERDICT r11 task #5): with HJA_CARBON_TARGET set to
-    # "host:port", the drain goes through a foreachBatch bridge that, per
-    # complete-mode snapshot, computes the SAME day rollup + Graphite
-    # lines and pushes them over TCP from the executors (_line_sender,
-    # chunked) — the periodic-reporter shape a Carbon relay expects
-    # (full snapshot re-emit, relay dedups by (path, ts) last-write-wins)
-    # — while persisting the latest session snapshot so the returned
-    # frame (and therefore the oracle) is unchanged. Unset: the original
-    # memory-sink drain.
     target = os.environ.get("HJA_CARBON_TARGET", "")
     if target:
         host, sep, port_s = target.rpartition(":")
@@ -1172,48 +941,7 @@ def ops_stream_session_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "plain hostname/IPv4 and an ASCII-numeric port "
                 "(e.g. 'relay.example.com:2003')"
             )
-        sender = _line_sender(host, int(port_s))
-        snap_dir = os.path.join(_ARTIFACTS, f"carbon_snap_{next(_uid)}")
-        shutil.rmtree(snap_dir, ignore_errors=True)
-
-        def emit(batch_df: DataFrame, batch_id: int) -> None:
-            # two actions consume this snapshot (socket send + parquet
-            # keep-latest); without persist each would re-read the state
-            # store and re-run the rollup (r12 self-review) — the
-            # documented foreachBatch multi-action pattern.
-            batch_df.persist()
-            try:
-                _session_report_lines(batch_df).select("line").foreachPartition(sender)
-                batch_df.write.mode("overwrite").parquet(snap_dir)
-            finally:
-                batch_df.unpersist()
-
-        q = (
-            sess.writeStream.foreachBatch(emit)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            p = q.lastProgress
-            if p:
-                LAST_PROGRESS["ops_stream_session_report"] = p
-        except Exception:
-            pass
-        if not os.path.exists(snap_dir):
-            return _session_report_lines(spark.createDataFrame([], sess.schema))
-        return _session_report_lines(spark.read.parquet(snap_dir))
     s = run_to_memory(spark, sess, "ops_stream_session_report", "complete")
-    return _session_report_lines(s)
-
-
-def _session_report_lines(s: DataFrame) -> DataFrame:
-    """Batch stage of ops_stream_session_report: finalized per-(user,
-    session) rows → per-day health rollup → Graphite plaintext lines.
-    Shared verbatim between the memory-sink drain and the flagged
-    foreachBatch-to-socket bridge so both emit the identical wire
-    format (and the oracle grades exactly what the socket carries)."""
     d = s.groupBy(F.date_trunc("day", "session_start").alias("day")).agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum("n_events").alias("n_events"),
@@ -1239,9 +967,12 @@ def _session_report_lines(s: DataFrame) -> DataFrame:
         ".", F.lit("hja"), F.lit("stream"), F.lit("sessions"), F.col("metric")
     )
     ts_epoch = F.unix_timestamp("day").cast("bigint")
-    return m.select(
+    lines = m.select(
         path.alias("metric_path"),
         F.col("val_str").cast("double").alias("metric_value"),
         ts_epoch.alias("ts_epoch"),
         F.concat_ws(" ", path, F.col("val_str"), ts_epoch.cast("string")).alias("line"),
     )
+    if target:
+        lines.select("line").foreachPartition(_line_sender(host, int(port_s)))
+    return lines

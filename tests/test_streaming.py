@@ -191,24 +191,6 @@ def test_stream_custom_sessionize_equals_batch(spark, sf_dir):
     assert _rows(got) == _rows(want)
 
 
-def test_stream_dedup_twin_hash_equal(spark, sf_dir):
-    """stream_dedup_within_watermark (bounded state) must reproduce the
-    registered unbounded key row-for-row at two SFs: the duplicates are
-    exact copies with identical event time, so watermark eviction can
-    never split a duplicate pair across the horizon. This is the
-    execution-twin discipline (same as the salted window twins): the
-    scale-safe variant carries a hash-equality pin instead of a
-    registry entry."""
-    from hadoop_job_analyzer_spark.streaming.streams import (
-        stream_dedup_within_watermark,
-    )
-
-    for d in (sf_dir, "/root/testdata/sf0.01"):
-        got = stream_dedup_within_watermark(spark, d)
-        want = queries()["stream_dedup"](spark, d)
-        assert _rows(got) == _rows(want)
-
-
 def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
     """Cluster-shaped layout (r8): every distributed writer produces the
     events table as a DIRECTORY of part files, not a single file. The
@@ -218,10 +200,7 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
     rows. Regression for the pq.read_schema-on-a-directory crash."""
     import os
 
-    from hadoop_job_analyzer_spark.streaming.streams import (
-        _events_ts_is_long,
-        events_stream_dir,
-    )
+    from hadoop_job_analyzer_spark.streaming.streams import _events_ts_is_long, _stream_dir
 
     d = str(tmp_path / "cluster_sf")
     os.makedirs(d)
@@ -234,7 +213,7 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
     # VALUE is writer-dependent (Spark 4.1 writes timestamp[ns], which the
     # nanosAsLong session conf surfaces as long — the ns branch's job).
     assert _events_ts_is_long(d) in (True, False)
-    assert events_stream_dir(d) == f"{d}/events.parquet"
+    assert _stream_dir(d, "events") == f"{d}/events.parquet"
     got = queries()["stream_file_source"](spark, d)
     want = queries()["stream_file_source"](spark, sf_dir)
     assert _rows(got) == _rows(want)
@@ -243,12 +222,10 @@ def test_stream_reads_directory_shaped_events_table(spark, sf_dir, tmp_path):
     # to a directory-shaped table yielded a silently EMPTY stream (the
     # worst failure mode — 0 rows, no crash; first seen at the r8
     # inflated dirs).
-    from hadoop_job_analyzer_spark.streaming.streams import docs_stream_dir
-
     load_table(spark, sf_dir, "documents").repartition(3).write.parquet(
         f"{d}/documents.parquet"
     )
-    assert docs_stream_dir(d) == f"{d}/documents.parquet"
+    assert _stream_dir(d, "documents") == f"{d}/documents.parquet"
     got_d = queries()["stream_near_dedup_norm"](spark, d)
     assert got_d.count() > 0
     assert _rows(got_d) == _rows(queries()["stream_near_dedup_norm"](spark, sf_dir))
@@ -266,6 +243,9 @@ def test_state_operator_accounting(spark, sf_dir):
       progress order, then dropDuplicates) — the dedup operator's rows
       must equal the DISTINCT event_id count, the agg's the type count;
       summing is the only correct total.
+    - stream_late_data and stream_foreach_batch drain to parquet, not
+      the memory sink; every key drains through streams._drain, so they
+      too leave a progress record.
     """
     from hadoop_job_analyzer_spark.streaming.streams import LAST_PROGRESS
 
@@ -288,44 +268,10 @@ def test_state_operator_accounting(spark, sf_dir):
         f"[{n_types}, {n_ids}] — a summed state-row total would drift"
     )
 
-
-def test_custom_sessionize_bridge_equals_memory_sink(spark, sf_dir):
-    """The foreachBatch→parquet bridge (run_to_parquet_bridge) must
-    reproduce the memory-sink result row-for-row (VERDICT r9 task #6):
-    the x256 proof that the memory sink — not the stateful pipeline —
-    is the scale bound (24.4 M rows drained in 102 s where the driver
-    sink OOMs, BASELINE.md r9) only counts if the bridge is pinned
-    SEMANTICALLY equal to the registered key at test SF. Same pipeline
-    (_custom_sessionize_emitted), same reduction, different sink."""
-    from hadoop_job_analyzer_spark.streaming.streams import (
-        stream_custom_sessionize_bridged,
-    )
-
-    got = stream_custom_sessionize_bridged(spark, sf_dir)
-    want = queries()["stream_custom_sessionize"](spark, sf_dir)
-    assert _rows(got) == _rows(want)
-
-
-def test_bridge_records_progress_and_is_distributed(spark, sf_dir):
-    """The bridge must (a) capture LAST_PROGRESS like run_to_memory, so
-    its state accounting is readable, and (b) land rows as parquet
-    FILES (executor-written), not a driver-held table."""
-    from hadoop_job_analyzer_spark.streaming.streams import (
-        LAST_PROGRESS,
-        stream_custom_sessionize_bridged,
-    )
-
-    LAST_PROGRESS.pop("stream_custom_sessionize_bridged", None)
-    out = stream_custom_sessionize_bridged(spark, sf_dir)
-    assert out.count() > 0
-    prog = LAST_PROGRESS.get("stream_custom_sessionize_bridged")
-    assert prog is not None and prog.get("stateOperators"), (
-        "bridge drain recorded no StreamingQueryProgress — its state "
-        "accounting would read nothing"
-    )
-    # parquet files on disk, readable by a fresh scan = distributed sink
-    files = [f for f in out.inputFiles() if f.endswith(".parquet")]
-    assert files, "bridge output is not file-backed parquet"
+    for key in ("stream_late_data", "stream_foreach_batch"):
+        LAST_PROGRESS.pop(key, None)
+        queries()[key](spark, sf_dir)
+        assert LAST_PROGRESS.get(key), f"{key} drain recorded no progress"
 
 
 def test_default_state_store_is_rocksdb(spark):
@@ -350,82 +296,13 @@ def test_default_state_store_is_rocksdb(spark):
     assert spark.conf.get(key) == ROCKSDB_STATE_STORE_PROVIDER
 
 
-def test_socket_sink_carbon_lines_over_loopback(spark, sf_dir):
-    """VERDICT r10 task #4: close the upstream emit boundary with REAL
-    bytes on a wire. A loopback TCP listener stands in for a Carbon
-    relay; stream_metrics_lines (the streaming twin of the
-    sink_metrics_lines key, same shared renderer) drains through
-    run_to_socket_lines — executor-side connections via
-    foreachPartition, newline-terminated Graphite plaintext. Assert the
-    bytes received over the socket == the batch key's rendered lines,
-    exactly (same multiset; every line newline-terminated)."""
-    import socket
-    import threading
-
-    from hadoop_job_analyzer_spark.streaming.streams import (
-        run_to_socket_lines,
-        stream_metrics_lines,
-    )
-
-    received: list[bytes] = []
-    srv = socket.create_server(("127.0.0.1", 0))
-    srv.settimeout(0.5)
-    port = srv.getsockname()[1]
-    stop = threading.Event()
-
-    def serve() -> None:
-        # drain-then-exit (r12 self-review): only stop once accept times
-        # out with the stop flag set, so a connection still sitting in
-        # the listen backlog when the driver reaches `finally` (one per
-        # non-empty partition — count depends on AQE) is served, not
-        # dropped.
-        while True:
-            try:
-                conn, _ = srv.accept()
-            except socket.timeout:
-                if stop.is_set():
-                    break
-                continue
-            with conn:
-                chunks = []
-                while True:
-                    b = conn.recv(65536)
-                    if not b:
-                        break
-                    chunks.append(b)
-                received.append(b"".join(chunks))
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-    try:
-        run_to_socket_lines(
-            spark,
-            stream_metrics_lines(spark, sf_dir),
-            "test_socket_sink",
-            "127.0.0.1",
-            port,
-        )
-    finally:
-        stop.set()
-        t.join(timeout=10)
-        srv.close()
-
-    wire = b"".join(received).decode("utf-8")
-    assert wire.endswith("\n")  # every line newline-terminated
-    got = sorted(wire.strip("\n").split("\n"))
-    want = sorted(
-        r.line for r in queries()["sink_metrics_lines"](spark, sf_dir).collect()
-    )
-    assert len(want) > 0
-    assert got == want
-
-
 def _drain_with_checkpoint(stream_df, ckpt: str, out: str, mode: str) -> None:
     """availableNow drain of whatever files the source currently sees,
     appending each micro-batch to `out` under its own _batch_id partition
-    (dynamic overwrite — the run_to_parquet_bridge idempotency shape) and
-    committing progress + state to `ckpt`. Restartable: calling again
-    with the same ckpt resumes from the recorded offsets and state."""
+    (dynamic overwrite, so a retried batch replaces its own partition
+    instead of appending duplicates) and committing progress + state to
+    `ckpt`. Restartable: calling again with the same ckpt resumes from
+    the recorded offsets and state."""
     def emit(bdf, bid: int) -> None:
         (
             bdf.withColumn("_batch_id", F.lit(bid))
